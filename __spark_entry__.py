@@ -541,7 +541,7 @@ def q_metrics_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language extraction metrics -- JOIN-FREE by design.
 
     ``lang`` is carried through the extraction projection as a
-    pass-through column, so the plan is scan -> mapInPandas -> one hash
+    pass-through column, so the plan is scan -> mapInArrow -> one hash
     aggregate.  The r2 shape (join extraction output back to the corpus
     to recover lang, with a broadcast hint) would broadcast a projection
     of the corpus itself: tens of TB at the 10^12-row design point.

@@ -20,7 +20,9 @@ NBSP_PLACEHOLDER = "&nbsp_place_holder;"
 RE_SPACE = re.compile(r"\s\+")
 RE_ORDERED_LIST_MATCHER = re.compile(r"\d+\.\s")
 RE_UNORDERED_LIST_MATCHER = re.compile(r"[-\*\+]\s")
-RE_MD_CHARS_MATCHER = re.compile(r"([\\\[\]\(\)])")
+#: characters escape_md escapes; the guard there scans for these
+MD_CHARS = "\\[]()"
+RE_MD_CHARS_MATCHER = re.compile("([%s])" % re.escape(MD_CHARS))
 RE_MD_CHARS_MATCHER_ALL = re.compile(r"([`\*_{}\[\]\(\)#!])")
 RE_LINK = re.compile(r"(\[.*?\] ?\(.*?\))|(\[.*?\]:.*?)")
 RE_TABLE = re.compile(r" \| ")

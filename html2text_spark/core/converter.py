@@ -30,6 +30,7 @@ parallel (see html2text_spark.pipeline).
 
 from __future__ import annotations
 
+import functools
 import html.entities
 import re
 import textwrap
@@ -46,10 +47,6 @@ _ENTITY_RE = re.compile(r"&(#[xX][0-9A-Fa-f]+|#[0-9]+|[A-Za-z][A-Za-z0-9]+);")
 # ASCII whitespace only, matching the reference's non-unicode /\s+/
 # (src/DataContainer.php:157)
 _WS_RE = re.compile(r"[ \t\n\r\f\v]+")
-# collapse is only needed for a double space or a non-space ws char (a
-# lone single space is already collapsed); one C-level scan beats the
-# per-call genexpr this replaced in the o() hot path
-_WS_GUARD_RE = re.compile(r"[\t\n\r\f\v]|  ")
 
 #: push()'s stressed-boundary test, precompiled (re.match with a literal
 #: pattern pays the pattern-cache lookup on every stressed-adjacent run)
@@ -312,7 +309,7 @@ class _Parser(HTMLParser):
 
     def handle_data(self, data: str) -> None:
         if "__PH2T__" not in data:  # fast path: no entities in this run
-            self.push(self._normalize_plain_text(data))
+            self.push(data if data.isascii() else self._normalize_plain_text(data))
             return
         pos = 0
         for m in _PLACEHOLDER_RE.finditer(data):
@@ -442,10 +439,10 @@ class _Parser(HTMLParser):
             self.empty_link = False
 
         if not self.code and not self.pre and not entity_char:
-            data = utils.escape_md_section(data, snob=self.cfg.escape_snob)
+            data = utils.escape_md_section(data, self.cfg.escape_snob)
         self.preceding_data = data
         self.empty_link = False
-        self.o(data, puredata=True)
+        self.o(data, True)
 
     def o(self, data: str, puredata: bool = False, force=False) -> None:
         """Emit output, handling indentation, whitespace and footnotes."""
@@ -464,7 +461,10 @@ class _Parser(HTMLParser):
                 self.drop_white_space = 0
 
         if puredata and not self.pre:
-            if _WS_GUARD_RE.search(data):
+            # collapse is only needed for a double space or a non-space
+            # ws char (all unprintable); a lone space is already collapsed.
+            # Two C string scans cost a fifth of one regex search here.
+            if "  " in data or not data.isprintable():
                 data = _WS_RE.sub(" ", data)
             if data and data[0] == " ":
                 self.space = True
@@ -479,9 +479,10 @@ class _Parser(HTMLParser):
                 self.out("\n[code]")
                 self.p_p = 0
 
-        bq = ">" * self.blockquote
-        if not (force in (True, "end") and data and data[0] == ">") and self.blockquote:
-            if bq:
+        bq = ""
+        if self.blockquote > 0:  # a stray </blockquote> takes it below 0
+            bq = ">" * self.blockquote
+            if not (force in (True, "end") and data and data[0] == ">"):
                 bq += " "
 
         if self.pre:
@@ -515,14 +516,17 @@ class _Parser(HTMLParser):
             self.out("\n")
             self.space = False
 
+        outtextlist = self.outtextlist
         if self.p_p:
-            self.out((self.br_toggle + "\n" + bq) * self.p_p)
+            # ends in bq, or in the newline when there is no bq
+            outtextlist.append((self.br_toggle + "\n" + bq) * self.p_p)
+            self.last_was_nl = not bq
             self.space = False
             self.br_toggle = ""
 
         if self.space:
             if not self.last_was_nl:
-                self.out(" ")
+                outtextlist.append(" ")
             self.space = False
 
         if self.a and (
@@ -555,7 +559,9 @@ class _Parser(HTMLParser):
                 self.out("  *[" + abbr + "]: " + definition + "\n")
 
         self.p_p = 0
-        self.out(data)
+        outtextlist.append(data)
+        if data:
+            self.last_was_nl = data[-1] == "\n"
         self.outcount += 1
 
     def p(self) -> None:
@@ -649,8 +655,9 @@ class _Parser(HTMLParser):
         self.parent_style = _EMPTY_STYLE
         self.tag_style = _EMPTY_STYLE
 
-        if self.cfg.tag_callback is not None:
-            if self.cfg.tag_callback(self, tag, attrs, start) is True:
+        cfg = self.cfg
+        if cfg.tag_callback is not None:
+            if cfg.tag_callback(self, tag, attrs, start) is True:
                 return
 
         # first thing inside the anchor tag is another tag that produces
@@ -659,13 +666,14 @@ class _Parser(HTMLParser):
             start
             and self.maybe_automatic_link is not None
             and tag not in ("p", "div", "style", "dl", "dt")
-            and (tag != "img" or self.cfg.ignore_images)
+            and (tag != "img" or cfg.ignore_images)
         ):
             self.o("[")
             self.maybe_automatic_link = None
             self.empty_link = False
 
-        if self.cfg.google_doc:
+        google_doc = cfg.google_doc
+        if google_doc:
             # the attrs dict is empty for a closing tag, and we need the
             # parent styles to resolve the effective style of this element
             if start:
@@ -684,7 +692,7 @@ class _Parser(HTMLParser):
                 if self.tag_stack:
                     self.parent_style = self.tag_stack[-1][2]
 
-        if tag not in _HANDLED_TAGS and not self.cfg.google_doc:
+        if tag not in _HANDLED_TAGS and not google_doc:
             # unknown/pass-through tag (span, font, section, ...): none of
             # the dispatch blocks below fire; only the ol/ul else-branch
             # side effect remains.  (googleDoc mode must fall through:
@@ -732,7 +740,7 @@ class _Parser(HTMLParser):
                     return  # prevent redundant emphasis marks on headers
 
         elif tag in ("p", "div"):
-            if self.cfg.google_doc:
+            if google_doc:
                 if start and utils.google_has_height(self.tag_style):
                     self.p()
                 else:
@@ -832,7 +840,7 @@ class _Parser(HTMLParser):
         else:
             matched_early = False
 
-        if self.cfg.google_doc:
+        if google_doc:
             if not self.inheader:
                 # handle some font attributes, but leave headers clean
                 self.add_emphasis(start, self.tag_style, self.parent_style)
@@ -972,7 +980,7 @@ class _Parser(HTMLParser):
             if not self.lst and not self.last_was_list:
                 self.p()
             if start:
-                if self.cfg.google_doc:
+                if google_doc:
                     list_style = utils.google_list_style(self.tag_style)
                 else:
                     list_style = tag
@@ -981,7 +989,7 @@ class _Parser(HTMLParser):
             else:
                 if self.lst:
                     self.lst.pop()
-                    if not self.cfg.google_doc and not self.lst:
+                    if not google_doc and not self.lst:
                         self.o("\n")
             self.last_was_list = True
             return  # reference's else-branch reset must not fire for ol/ul
@@ -994,7 +1002,7 @@ class _Parser(HTMLParser):
                     li = self.lst[-1]
                 else:
                     li = ListElement("ul", 0)
-                if self.cfg.google_doc:
+                if google_doc:
                     self.o(
                         "  "
                         * utils.google_nest_count(
@@ -1100,10 +1108,12 @@ class _Parser(HTMLParser):
     def _finalize_anchor(self, attrs: Dict[str, Optional[str]]) -> None:
         if self.cfg.inline_links:
             self.p_p = 0
-            title = utils.escape_md(attrs.get("title") or "")
+            title = attrs.get("title")
+            title_part = ""
+            if title and not title.isspace():
+                title_part = ' "' + utils.escape_md(title) + '"'
             href = attrs.get("href") or ""
             url = url_join(self.cfg.base_url, href)
-            title_part = ' "' + title + '"' if title.strip() else ""
             self.o("](" + utils.escape_md(url) + title_part + ")")
             return
         a_props = self._footnote_props(attrs)
@@ -1140,9 +1150,13 @@ class _Parser(HTMLParser):
     # document finalization (reference HTML2Markdown:59-73)
     # ------------------------------------------------------------------
 
-    def finish(self) -> str:
+    def flush(self) -> None:
+        """Emit the final chunks (pending break, reference footnotes)."""
         self.pbr()
         self.o("", force="end")
+
+    def finish(self) -> str:
+        self.flush()
         outtext = "".join(self.outtextlist)
         nbsp = "\u00a0" if self.cfg.unicode_snob else " "
         return outtext.replace(constants.NBSP_PLACEHOLDER, nbsp)
@@ -1160,48 +1174,76 @@ def _is_punctuation(ch: str) -> bool:
 # ----------------------------------------------------------------------
 
 
-def _fast_wrap(para: str, width: int, indent: str) -> List[str]:
-    """Greedy wrap, byte-identical to textwrap.wrap(break_long_words=False,
-    subsequent_indent=indent) for the eligible subset: single-space word
-    separators, no hyphens (textwrap's wordsep/em-dash machinery never
-    fires), no edge/control whitespace.  Caller checks eligibility.
+@functools.lru_cache(maxsize=None)  # a few widths per Config
+def _line_re(width: int) -> "re.Pattern[str]":
+    """Pattern matching one wrapped line plus the spaces that end it.
 
-    (A prefix-sum + bisect variant was measured SLOWER at realistic
-    paragraph sizes -- building the cumulative array costs more than the
-    simple loop saves; keep the direct greedy loop.)
+    Group 1 is the longest prefix of at most ``width`` characters that
+    ends in a non-space followed by a space or the end of the text, or,
+    when not even one word fits, that single long word
+    (break_long_words=False).  A width below 1 leaves one word per line.
     """
-    words = para.split(" ")
-    lines: List[str] = []
-    cur: List[str] = []
-    cur_len = 0
-    avail = width
-    for word in words:
-        add = len(word) + 1 if cur else len(word)
-        if not cur or cur_len + add <= avail:
-            cur.append(word)
-            cur_len += add
-        else:
-            lines.append(" ".join(cur))
-            avail = width - len(indent)
-            cur = [word]
-            cur_len = len(word)
-    if cur:
-        lines.append(" ".join(cur))
+    if width < 1:
+        return re.compile(r"([^ ]+) *")
+    return re.compile(r"(.{0,%d}[^ ](?= |\Z)|[^ ]+) *" % (width - 1))
+
+
+def _fast_wrap(para: str, width: int, indent: str) -> List[str]:
+    """Greedy wrap on spaces: one regex match per output line.
+
+    A space run between two lines is dropped; leading spaces are kept on
+    the first line when the first word still fits after them, and dropped
+    otherwise (textwrap then starts the first line at that word).  Every
+    other character, Unicode whitespace included, is part of a word.
+    """
+    first = _line_re(width)
+    m = first.match(para)
+    if m is None:
+        m = first.match(para, len(para) - len(para.lstrip(" ")))
+        if m is None:
+            return []  # blank paragraph
+    lines = [m.group(1)]
+    rest = _line_re(width - len(indent)).findall(para, m.end())
     if indent:
-        lines = lines[:1] + [indent + line for line in lines[1:]]
+        lines.extend([indent + line for line in rest])
+    else:
+        lines.extend(rest)
     return lines
 
 
-def _wrap_para(para: str, width: int, indent: str) -> List[str]:
-    if (
+def _single_spaced(para: str) -> bool:
+    """Words split by single spaces, none at either end, no hyphen, and
+    no whitespace textwrap expands or turns into spaces."""
+    return (
         "-" not in para
         and "  " not in para
         and para == para.strip()
         and "\t" not in para
+        and "\r" not in para
         and "\x0b" not in para
         and "\x0c" not in para
-        and "\r" not in para
-    ):
+    )
+
+
+def _wrap_para(para: str, width: int, indent: str) -> List[str]:
+    """Wrap one paragraph: textwrap.wrap(para, width,
+    break_long_words=False, subsequent_indent=indent), except that a
+    single-spaced paragraph always takes the greedy wrap.
+
+    The greedy wrap equals textwrap on a printable paragraph (so with no
+    whitespace but " ") with no hyphen, at width >= 1.  On a single-spaced
+    paragraph it differs in two ways the output has always had: it keeps
+    a word of only Unicode whitespace at a line break, where textwrap
+    drops it, and it takes a width below 1, where textwrap raises.
+    """
+    if width >= 1 and para.isprintable():
+        if len(para) <= width:
+            # fits on one line: textwrap would only drop trailing spaces
+            line = para.rstrip(" ")
+            return [line] if line else []
+        if "-" not in para:  # hyphens are break points only textwrap finds
+            return _fast_wrap(para, width, indent)
+    elif _single_spaced(para):
         return _fast_wrap(para, width, indent)
     return textwrap.wrap(
         para, width, break_long_words=False, subsequent_indent=indent
@@ -1218,68 +1260,63 @@ class WrapState:
 
 def optwrap(text: str, cfg: Config, state: Optional[WrapState] = None) -> str:
     """Wrap all paragraphs of converted output at cfg.body_width."""
-    if not cfg.body_width:
+    width = cfg.body_width
+    if not width:
         return text
     if state is None:
         state = WrapState()
 
-    result = []
+    result: List[str] = []
+    append = result.append
+    skipwrap = utils.skipwrap
     wrap_links = cfg.wrap_links
+    wrap_list_items = cfg.wrap_list_items
+    wrap_tables = cfg.wrap_tables
+    backquote = cfg.backquote_code_style
+    list_item = "  " + cfg.ul_item_mark
+    newlines = state.newlines
+    start_code = state.start_code
     for para in text.split("\n"):
+        if not para and not start_code:
+            if newlines < 2:
+                append("\n")
+                newlines += 1
+            continue
         # text between tri-backquote pairs is a code block; don't wrap
-        if cfg.backquote_code_style and para.lstrip().startswith("```"):
-            state.start_code = not state.start_code
-        if state.start_code:
-            result.append(para + "\n")
-            state.newlines = 1
-        elif para:
-            if not utils.skipwrap(
-                para, wrap_links, cfg.wrap_list_items, cfg.wrap_tables
-            ):
-                indent = ""
-                if para.startswith("  " + cfg.ul_item_mark):
-                    # list item continuation: double indent on new lines
-                    indent = "    "
-                elif para.startswith("> "):
-                    # blockquote continuation: prefix '>' on new lines
-                    indent = "> "
-                if (
-                    len(para) <= cfg.body_width
-                    and para == para.strip()
-                    and "\t" not in para
-                    and "\x0b" not in para
-                    and "\x0c" not in para
-                    and "\r" not in para
-                ):
-                    # fits on one line and textwrap would return it
-                    # verbatim (no edge whitespace to drop, no tabs to
-                    # expand) -- skip the chunk-splitting machinery
-                    result.append(para)
-                else:
-                    wrapped = _wrap_para(para, cfg.body_width, indent)
-                    result.append("\n".join(wrapped))
-                if para.endswith("  "):
-                    result.append("  \n")
-                    state.newlines = 1
-                elif indent:
-                    result.append("\n")
-                    state.newlines = 1
-                else:
-                    result.append("\n\n")
-                    state.newlines = 2
-            else:
-                # warning for the tempted: this is NOT line.isspace().
-                # Anchored match (upstream-Python semantics): the PHP port
-                # searches /\s\+/ anywhere, which silently DROPS list items
-                # when ul_item_mark='+' ("  + a" contains " +"); no fixture
-                # distinguishes, so we keep the content-preserving form.
-                if not constants.RE_SPACE.match(para):
-                    result.append(para + "\n")
-                    state.newlines = 1
+        if backquote and para.lstrip().startswith("```"):
+            start_code = not start_code
+        if start_code:
+            append(para + "\n")
+            newlines = 1
+        elif skipwrap(para, wrap_links, wrap_list_items, wrap_tables):
+            # warning for the tempted: this is NOT line.isspace().
+            # Anchored match (upstream-Python semantics): the PHP port
+            # searches /\s\+/ anywhere, which silently DROPS list items
+            # when ul_item_mark='+' ("  + a" contains " +"); no fixture
+            # distinguishes, so we keep the content-preserving form.
+            if not constants.RE_SPACE.match(para):
+                append(para + "\n")
+                newlines = 1
         else:
-            if state.newlines < 2:
-                result.append("\n")
-                state.newlines += 1
+            indent = ""
+            if para.startswith(list_item):
+                # list item continuation: double indent on new lines
+                indent = "    "
+            elif para.startswith("> "):
+                # blockquote continuation: prefix '>' on new lines
+                indent = "> "
+            append("\n".join(_wrap_para(para, width, indent)))
+            if para.endswith("  "):
+                append("  \n")
+                newlines = 1
+            elif indent:
+                append("\n")
+                newlines = 1
+            else:
+                append("\n\n")
+                newlines = 2
+    state.newlines = newlines
+    state.start_code = start_code
     return "".join(result)
 
 
@@ -1302,9 +1339,9 @@ def _dispatch_events(parser: "_Parser", events: list) -> None:
         if kind == "data":
             handle_data(ev[1])
         elif kind == "start":
-            handle_tag(ev[1], attr_dict(ev[2]), start=True)
+            handle_tag(ev[1], attr_dict(ev[2]), True)
         else:
-            handle_tag(ev[1], {}, start=False)
+            handle_tag(ev[1], {}, False)
 
 
 def _feed_document(parser: "_Parser", processed: str) -> None:
@@ -1357,8 +1394,8 @@ def convert_spans(
     cross-line state).
     """
     cfg = cfg or Config()
-    html_all = "".join(t for k, t, _ in spans if k == "html").strip()
-    if not html_all:
+    # (str.isspace and str.strip agree on what whitespace is)
+    if all(not t or t.isspace() for k, t, _m in spans if k == "html"):
         return [
             ("media_ref", "", media)
             for kind, _text, media in spans
@@ -1372,20 +1409,26 @@ def convert_spans(
     ordered_media: List[Tuple[str, int]] = []
 
     def _drain_img_refs() -> None:
-        while parser.media_refs:
-            ref = parser.media_refs.pop(0)
-            ordered_media.append((ref.media_ref, ref.segment))
+        ordered_media.extend((r.media_ref, r.segment) for r in parser.media_refs)
+        parser.media_refs.clear()
 
     # coalesce runs of consecutive html spans: a fragment boundary is only
     # meaningful where a media span sits between them (feeding fragments
     # separately would let tokenizer-buffer chunking interact with the
-    # stressed/whitespace state machine and break invariant 1)
+    # stressed/whitespace state machine and break invariant 1).  Runs are
+    # joined once, so n consecutive spans cost O(total length).
     coalesced: List[Tuple[str, str, str]] = []
+    run: List[str] = []
     for kind, text, media in spans:
-        if kind == "html" and coalesced and coalesced[-1][0] == "html":
-            coalesced[-1] = ("html", coalesced[-1][1] + text, "")
-        else:
-            coalesced.append((kind, text, media))
+        if kind == "html":
+            run.append(text)
+            continue
+        if run:
+            coalesced.append(("html", "".join(run), ""))
+            run = []
+        coalesced.append((kind, text, media))
+    if run:
+        coalesced.append(("html", "".join(run), ""))
     spans = coalesced
     multi_fragment = sum(1 for k, _t, _m in spans if k == "html") > 1
     # fast path for interleaved documents: if EVERY html fragment
@@ -1427,7 +1470,7 @@ def convert_spans(
             ordered_media.append((media, parser.segment))
             parser.segment += 1
     parser.close()
-    parser.finish()  # appends the final chunks to outtextlist
+    parser.flush()
     _drain_img_refs()
 
     chunks = parser.outtextlist

@@ -122,36 +122,43 @@ def skipwrap(
     if not wrap_links and constants.RE_LINK.search(para):
         return True
     # 4-space / tab indent => code block
-    if para.startswith("    ") or para.startswith("\t"):
+    if para.startswith(("    ", "\t")):
         return True
     stripped = para.lstrip()
-    # leading "--" (not "---"): an emdash paragraph, which does wrap
-    if stripped.startswith("--") and len(stripped) > 2 and stripped[2] != "-":
-        return False
-    if stripped.startswith("-") or stripped.startswith("*"):
-        if not stripped.startswith("**"):
-            return not wrap_list_items
+    first = stripped[:1]
+    if first == "-":
+        # leading "--" (not "---"): an emdash paragraph, which does wrap
+        if stripped[1:2] == "-" and len(stripped) > 2 and stripped[2] != "-":
+            return False
+        return not wrap_list_items
+    if first == "*" and not stripped.startswith("**"):
+        return not wrap_list_items
     if not wrap_tables and constants.RE_TABLE.search(para):
         return True
-    if constants.RE_ORDERED_LIST_MATCHER.match(stripped):
+    if first.isdecimal() and constants.RE_ORDERED_LIST_MATCHER.match(stripped):
         return True
-    if constants.RE_UNORDERED_LIST_MATCHER.match(stripped):
-        return True
-    return False
+    # RE_UNORDERED_LIST_MATCHER's "-" and "*" cases returned above
+    return first == "+" and constants.RE_UNORDERED_LIST_MATCHER.match(
+        stripped
+    ) is not None
 
 
 def escape_md(text: str) -> str:
     """Escape markdown-sensitive chars within other markdown constructs."""
-    return constants.RE_MD_CHARS_MATCHER.sub(r"\\\1", text)
+    # most link targets and alt texts hold none: skip the regex sub
+    for ch in constants.MD_CHARS:
+        if ch in text:
+            return constants.RE_MD_CHARS_MATCHER.sub(r"\\\1", text)
+    return text
 
 
+#: the three line-leading list/hr lookalikes, each keyed by the character
+#: it cannot match without (the guard in escape_md_section): "N." before
+#: space, "+" before space, "-" before space or another dash.  Same
+#: replacements as the three separate reference regexes, fused for speed.
+_LINE_MARKERS = {".": r"\d+\.(?=\s)", "+": r"\+(?=\s)", "-": r"-(?=\s|-)"}
 _RE_MD_LINE_MARKER = re.compile(
-    # one pass over the three line-leading list/hr lookalikes
-    # (dot: "N." before space; plus: "+" before space; dash: "-" before
-    # space or another dash) -- same replacements as the three separate
-    # reference regexes, fused for speed
-    r"^(\s*)(\d+\.(?=\s)|\+(?=\s)|-(?=\s|-))",
-    re.MULTILINE,
+    r"^(\s*)(%s)" % "|".join(_LINE_MARKERS.values()), re.MULTILINE
 )
 
 
@@ -168,7 +175,11 @@ def escape_md_section(text: str, snob: bool = False) -> str:
         text = constants.RE_MD_BACKSLASH_MATCHER.sub(r"\\\1", text)
     if snob:
         text = constants.RE_MD_CHARS_MATCHER_ALL.sub(r"\\\1", text)
-    return _RE_MD_LINE_MARKER.sub(_line_marker_repl, text)
+    # most sections hold no line-marker character: skip the regex sub
+    for ch in _LINE_MARKERS:
+        if ch in text:
+            return _RE_MD_LINE_MARKER.sub(_line_marker_repl, text)
+    return text
 
 
 def reformat_table(lines: List[str], right_margin: int) -> List[str]:

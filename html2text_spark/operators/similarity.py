@@ -34,17 +34,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity rounded to 8dp (the oracle-mirrored form).
-
-    Reference definition only: the operators precompute ``_norm`` per
-    ROW and divide by the product inside the pair loop (identical IEEE
-    op order, bit-equal results) instead of re-evaluating both norm
-    folds per candidate pair.
-    """
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 8)
-
-
 def cosine_topk(
     emb: DataFrame,
     query_ids: Sequence[int],

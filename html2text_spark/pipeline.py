@@ -3,12 +3,16 @@
 The per-document converter (html2text_spark.core.converter) is pure and
 row-local, so the pipeline is a single narrow *projection*:
 
-    scan -> [optional skew repartition] -> mapInPandas(convert) -> sink
+    scan -> [optional skew repartition] -> mapInArrow(convert) -> sink
 
 No shuffle is required for correctness -- only the optional explicit
 repartition to defuse large-document skew (BASELINE.json north_rule).
 Catalyst prunes the scan to (doc_id, spans) automatically because the
 plan is declared via the DataFrame API.
+
+One Arrow batch kernel (_convert_batch) serves extract, its output-pruned
+twins and the streaming ingest: columnar in and out, no pandas (see
+html2text_spark.arrow).
 
 Design notes for the 10^12-document scale target:
   * documents are embarrassingly parallel; state never crosses rows;
@@ -24,12 +28,13 @@ Design notes for the 10^12-document scale target:
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterator, List, Optional, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -41,6 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .arrow import array_of
 from .core.config import Config
 from .core.converter import convert_spans
 
@@ -77,6 +83,15 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
+#: extract(output=...) -> the columns it adds after doc_id
+OUTPUTS = {
+    "full": (OUTPUT_SCHEMA["spans"], OUTPUT_SCHEMA["metrics"]),
+    "metrics": (OUTPUT_SCHEMA["metrics"],),
+    "markdown": (StructField("markdown", StringType()),),
+}
+_SPANS_ARROW = to_arrow_type(ArrayType(SPAN_TYPE))
+_METRICS_ARROW = to_arrow_type(METRICS_TYPE)
+
 
 def recommended_session_conf() -> dict:
     """Session settings for the extraction workload (large string rows)."""
@@ -91,92 +106,117 @@ def recommended_session_conf() -> dict:
     }
 
 
-def _convert_row_core(raw_spans, cfg: Config):
-    """Pure per-row conversion: input span structs -> (span tuples, metrics).
+def _convert_row(spans: Sequence, cfg: Config):
+    """Pure per-row conversion: input span tuples -> (output spans,
+    bytes_in, malformed, ms).
 
-    A malformed row (NULL spans, NULL offsets, conversion failure) must
-    never fail the job: it yields empty output with metrics.malformed set
+    ``spans`` holds (kind, text, media_ref, offset) tuples, or None for a
+    NULL span struct.  A malformed row (NULL span, conversion failure)
+    must never fail the job: it yields empty output with malformed set
     (the reference raises LogicException for e.g. invalid base URLs -- we
-    record it instead).  Returns output spans as (kind, text, media_ref)
-    tuples; ``_convert_row_spans`` adds the struct dicts for callers that
-    ship the spans column, while the output-pruned projections
-    (extract_metrics_only / extract_markdown_only) consume the tuples
-    directly and never build them.
+    record it instead).  Output spans are (kind, text, media_ref) tuples.
     """
     in_spans = []
     bytes_in = 0
     t0 = time.perf_counter()
     malformed = False
     try:
-        # NB: raw_spans arrives as a numpy array from Arrow -- `or []`
-        # would raise on its ambiguous truth value
-        spans_list = [] if raw_spans is None else raw_spans
-        if len(spans_list) > 1:
-            spans_list = sorted(spans_list, key=lambda x: x["offset"] or 0)
-        for s in spans_list:
-            kind = s["kind"] or ""
-            text = s["text"] or ""
-            media = s["media_ref"] or ""
+        if len(spans) > 1:
+            spans = sorted(spans, key=lambda s: s[3] or 0)
+        for kind, text, media, _offset in spans:
+            text = text or ""
+            media = media or ""
             # utf-8 byte count == len() for ASCII text; isascii() is a
             # C-speed scan, encode() additionally allocates the bytes
             if text.isascii():
                 bytes_in += len(text) + len(media)
             else:
                 bytes_in += len(text.encode("utf-8", "ignore")) + len(media)
-            in_spans.append((kind, text, media))
+            in_spans.append((kind or "", text, media))
         out = convert_spans(in_spans, cfg)
     except Exception:
         malformed = True
         out = []
-    ms = (time.perf_counter() - t0) * 1000.0
-    return out, {
-        "spans": len(out),
-        "bytes_in": bytes_in,
-        "malformed": malformed,
-        "ms": ms,
-    }
+    return out, bytes_in, malformed, (time.perf_counter() - t0) * 1000.0
 
 
-def _convert_row_spans(raw_spans, cfg: Config):
-    """Full-output per-row conversion: input structs -> output structs."""
-    out, metrics = _convert_row_core(raw_spans, cfg)
-    out_structs = [
-        {"kind": k, "text": t, "media_ref": m, "offset": i}
-        for i, (k, t, m) in enumerate(out)
+def _row_spans(spans: pa.Array) -> List[Sequence]:
+    """Per-row input span tuples (kind, text, media_ref, offset), read
+    column by column from the list array's child arrays.  A NULL row
+    gives an empty row and a NULL span struct gives None."""
+    if len(spans) == 0:
+        return []
+    offsets = spans.offsets.to_pylist()
+    base = offsets[0]
+    # .values ignores a slice offset; .offsets does not, so rebase
+    values = spans.values.slice(base, offsets[-1] - base)
+    names = ("kind", "text", "media_ref", "offset")
+    elems = list(zip(*[values.field(c).to_pylist() for c in names]))
+    if values.null_count:
+        for j, valid in enumerate(values.is_valid().to_pylist()):
+            if not valid:
+                elems[j] = None
+    rows: List[Sequence] = [
+        elems[lo - base : hi - base] for lo, hi in zip(offsets, offsets[1:])
     ]
-    return out_structs, metrics
+    if spans.null_count:
+        for i, valid in enumerate(spans.is_valid().to_pylist()):
+            if not valid:
+                rows[i] = ()
+    return rows
 
 
-def make_extract_fn(cfg: Optional[Config] = None, passthrough: tuple = ()):
-    """Build the mapInPandas batch function (closure captures the config).
+def _convert_batch(
+    batch: pa.RecordBatch,
+    cfg: Config,
+    output: str = "full",
+    passthrough: Sequence[str] = (),
+) -> pa.RecordBatch:
+    """One Arrow batch of documents(doc_id, spans, *passthrough) -> one
+    batch of (doc_id, <OUTPUTS[output] columns>, *passthrough)."""
+    out_fields = [f.name for f in OUTPUTS[output]]
+    want_spans = "spans" in out_fields
+    want_markdown = "markdown" in out_fields
+    flat: list = []  # output spans of the whole batch
+    list_offsets = [0]
+    positions: List[int] = []
+    n_spans, bytes_in, malformed, ms, markdown = [], [], [], [], []
+    for row in _row_spans(batch.column("spans")):
+        out, n_bytes, bad, row_ms = _convert_row(row, cfg)
+        n_spans.append(len(out))
+        bytes_in.append(n_bytes)
+        malformed.append(bad)
+        ms.append(row_ms)
+        if want_spans:
+            flat.extend(out)
+            list_offsets.append(len(flat))
+            positions.extend(range(len(out)))
+        if want_markdown:
+            markdown.append("".join([t for k, t, _m in out if k == "text"]))
 
-    ``passthrough`` columns ride along the projection unchanged: carrying
-    a grouping key (e.g. ``lang``) through the extraction costs nothing
-    here, whereas recovering it later means a corpus-x-corpus join -- and
-    broadcasting a corpus-sized side is a driver OOM at design scale.
-    """
-    cfg = cfg or Config()
-
-    def extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_spans_col = []
-            metrics_col = []
-            for raw in pdf["spans"]:
-                spans, metrics = _convert_row_spans(raw, cfg)
-                out_spans_col.append(spans)
-                metrics_col.append(metrics)
-            out = {
-                "doc_id": pdf["doc_id"],
-                "spans": out_spans_col,
-                "metrics": metrics_col,
-            }
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return extract_batches
+    columns = {"doc_id": batch.column("doc_id")}
+    if want_spans:
+        structs = pa.StructArray.from_arrays(
+            [array_of([s[i] for s in flat], pa.string()) for i in range(3)]
+            + [array_of(positions, pa.int32())],
+            fields=list(_SPANS_ARROW.value_type),
+        )
+        columns["spans"] = pa.ListArray.from_arrays(
+            array_of(list_offsets, pa.int32()), structs, type=_SPANS_ARROW
+        )
+    if "metrics" in out_fields:
+        metrics = (n_spans, bytes_in, malformed, ms)
+        columns["metrics"] = pa.StructArray.from_arrays(
+            [array_of(v, f.type) for v, f in zip(metrics, _METRICS_ARROW)],
+            fields=list(_METRICS_ARROW),
+        )
+    if want_markdown:
+        columns["markdown"] = array_of(markdown, pa.string())
+    for c in passthrough:
+        columns[c] = batch.column(c)
+    return pa.RecordBatch.from_arrays(
+        list(columns.values()), names=list(columns)
+    )
 
 
 def salt_by_size(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -300,6 +340,7 @@ def extract(
     salt_partitions: Optional[int] = None,
     stratify_bytes: Optional[int] = None,
     passthrough: tuple = (),
+    output: str = "full",
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted(doc_id, spans, metrics).
 
@@ -307,97 +348,48 @@ def extract(
     ``stratify_bytes`` additionally routes documents above that size
     through the monster-tier cyclic layout (see salt_stratified).
     ``passthrough`` names input columns to carry through unchanged
-    (appended after ``metrics`` with their input types) -- the scale-safe
-    way to keep grouping keys: no post-hoc join against the corpus.
+    (appended after the output columns with their input types) -- the
+    scale-safe way to keep grouping keys: no post-hoc join against the
+    corpus.
+
+    ``output`` prunes the output side of the boundary, which Catalyst
+    cannot do inside an opaque mapInArrow: ``"metrics"`` gives
+    (doc_id, metrics) and never builds or ships the span structs;
+    ``"markdown"`` gives (doc_id, markdown), the 'text' spans joined in
+    the worker, equal to ``text_of(extract(df))`` by convert_spans
+    invariant 1.  Every output runs the identical per-row conversion.
     """
     if salt_partitions and stratify_bytes:
         df = salt_stratified(df, salt_partitions, stratify_bytes)
     elif salt_partitions:
         df = salt_by_size(df, salt_partitions)
     schema = StructType(
-        list(OUTPUT_SCHEMA.fields) + [df.schema[c] for c in passthrough]
-    )
-    return df.select("doc_id", "spans", *passthrough).mapInPandas(
-        make_extract_fn(cfg, passthrough), schema
-    )
-
-
-def extract_metrics_only(
-    df: DataFrame,
-    cfg: Optional[Config] = None,
-    passthrough: tuple = (),
-) -> DataFrame:
-    """Output-pruned extraction twin: (doc_id, metrics, *passthrough).
-
-    ``mapInPandas`` is opaque to Catalyst, so column pruning cannot reach
-    *inside* the Python function's output: a query that only consumes
-    ``metrics`` still pays Arrow serialization (and JVM materialization)
-    of every output span struct when it goes through plain ``extract``.
-    This twin runs the IDENTICAL per-row conversion (_convert_row_core)
-    but never builds or ships the span structs -- the optimization
-    guide's "pass only the columns the function needs", applied to the
-    output side of the boundary.  Values are exactly those of
-    ``extract(df).select("doc_id", "metrics", *passthrough)``.
-    """
-    cfg = cfg or Config()
-
-    def metrics_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metrics_col = [
-                _convert_row_core(raw, cfg)[1] for raw in pdf["spans"]
-            ]
-            out = {"doc_id": pdf["doc_id"], "metrics": metrics_col}
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("metrics", METRICS_TYPE),
-        ]
+        [StructField("doc_id", StringType()), *OUTPUTS[output]]
         + [df.schema[c] for c in passthrough]
     )
-    return df.select("doc_id", "spans", *passthrough).mapInPandas(
-        metrics_batches, schema
-    )
-
-
-def extract_markdown_only(
-    df: DataFrame, cfg: Optional[Config] = None
-) -> DataFrame:
-    """Output-pruned extraction twin: (doc_id, markdown).
-
-    Equivalent to ``text_of(extract(df))`` -- the markdown string is
-    assembled in the Python worker (join of the 'text' span texts in
-    order, exactly what ``markdown_col`` computes JVM-side) instead of
-    Arrow-shipping every span struct to the JVM and re-concatenating
-    there.  Identical values by convert_spans invariant 1.
-    """
     cfg = cfg or Config()
 
-    def md_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            md_col = [
-                "".join(
-                    t for k, t, _m in _convert_row_core(raw, cfg)[0]
-                    if k == "text"
-                )
-                for raw in pdf["spans"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "markdown": md_col})
+    def convert_batches(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _convert_batch(batch, cfg, output, passthrough)
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("markdown", StringType()),
-        ]
+    return df.select("doc_id", "spans", *passthrough).mapInArrow(
+        convert_batches, schema
     )
-    return df.select("doc_id", "spans").mapInPandas(md_batches, schema)
+
+
+def extract_metrics_only(df: DataFrame, cfg: Optional[Config] = None, **kw):
+    """``extract(df, cfg, output="metrics", **kw)``: (doc_id, metrics,
+    *passthrough)."""
+    return extract(df, cfg, output="metrics", **kw)
+
+
+def extract_markdown_only(df: DataFrame, cfg: Optional[Config] = None, **kw):
+    """``extract(df, cfg, output="markdown", **kw)``: (doc_id, markdown,
+    *passthrough)."""
+    return extract(df, cfg, output="markdown", **kw)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

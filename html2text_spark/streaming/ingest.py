@@ -1,7 +1,7 @@
 """Incremental corpus ingestion via Structured Streaming.
 
 The extraction is a stateless per-document projection, so the streaming
-plan is identical to batch (same mapInPandas) with Spark's streaming
+plan is identical to batch (the same ``extract``) with Spark's streaming
 checkpoint giving exactly-once sink semantics.  No watermarks or stateful
 operators are required (north_rule's resume requirement is covered by the
 batch checkpoint module; this path covers continuously-arriving corpora,
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..core.config import Config
-from ..pipeline import INPUT_SCHEMA, make_extract_fn, OUTPUT_SCHEMA
+from ..pipeline import INPUT_SCHEMA, extract
 
 
 def streaming_extract(
@@ -31,7 +31,7 @@ def streaming_extract(
     available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ) -> StreamingQuery:
-    """readStream(parquet documents) -> mapInPandas -> writeStream(parquet).
+    """readStream(parquet documents) -> extract -> writeStream(parquet).
 
     Returns the running StreamingQuery; call .awaitTermination().
     """
@@ -39,7 +39,7 @@ def streaming_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_path)
-    extracted = stream.mapInPandas(make_extract_fn(cfg), OUTPUT_SCHEMA)
+    extracted = extract(stream, cfg)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", output_path)

@@ -88,3 +88,19 @@ def test_config_from_options_aliases():
     assert cfg.base_url == "http://x/"
     assert cfg.bold_text_style_values == ("bold",)
     assert cfg.google_doc is True
+
+
+def test_unicode_snob_nbsp_at_paragraph_end():
+    # the wrap pass drops a word of only Unicode whitespace at a paragraph
+    # end (textwrap semantics), so a trailing or lone &nbsp; goes ...
+    assert convert("<p>a &nbsp;</p>", Config(unicode_snob=True)) == "a \n\n"
+    assert convert("<p>&nbsp;</p>", Config(unicode_snob=True)) == "\n\n"
+    assert convert("<p>a &#8195;</p>") == "a \n\n"
+    # ... but keeps one at a line break inside a single-spaced paragraph
+    assert convert("<p>" + "x" * 76 + " &#8195; y</p>") == (
+        "x" * 76 + " \u2003\ny\n\n"
+    )
+
+
+def test_negative_body_width_puts_one_word_per_line():
+    assert convert("<p>a b</p>", Config(body_width=-1)) == "a\nb\n\n"

@@ -3,6 +3,7 @@ identically to the HTMLParser fallback path (it aborts to the fallback on
 anything it cannot replicate bit-for-bit)."""
 
 import random
+import sys
 
 import pytest
 
@@ -213,20 +214,128 @@ _word = st.text(
 ).filter(lambda w: "-" not in w and not w.isspace())
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    words=st.lists(_word, min_size=1, max_size=40),
-    width=st.integers(min_value=4, max_value=80),
-    indent=st.sampled_from(["", "    ", "> "]),
-)
-def test_fast_wrap_matches_textwrap(words, width, indent):
-    para = " ".join(words)
-    if para != para.strip() or "  " in para or "-" in para:
-        return
-    expected = textwrap.wrap(
+def _textwrap(para, width, indent):
+    return textwrap.wrap(
         para, width, break_long_words=False, subsequent_indent=indent
     )
+
+
+@settings(max_examples=500, deadline=None)
+@given(
+    words=st.lists(_word, min_size=1, max_size=40),
+    gaps=st.lists(st.integers(min_value=1, max_value=4), min_size=40,
+                  max_size=40),
+    lead=st.integers(min_value=0, max_value=3),
+    trail=st.integers(min_value=0, max_value=3),
+    width=st.integers(min_value=1, max_value=80),
+    indent=st.one_of(
+        st.sampled_from(["", "    ", "> "]),
+        st.integers(min_value=0, max_value=90).map(lambda k: " " * k),
+    ),
+)
+def test_fast_wrap_matches_textwrap(words, gaps, lead, trail, width, indent):
+    """Every shape the fast wrap accepts: leading spaces (a line that opens
+    with a space after emphasis), runs of spaces, trailing spaces (table
+    rows end in two), words longer than the width, and an indent as wide
+    as the width or wider."""
+    body = "".join(w + " " * g for w, g in zip(words, gaps)).rstrip(" ")
+    para = " " * lead + body + " " * trail
+    expected = _textwrap(para, width, indent)
     assert C._fast_wrap(para, width, indent) == expected, (para, width, indent)
+
+
+@settings(max_examples=500, deadline=None)
+@given(
+    para=st.text(
+        alphabet=st.sampled_from(list("ab-. \t\r\x0b\x0cé")),
+        max_size=60,
+    ),
+    width=st.integers(min_value=1, max_value=30),
+    indent=st.sampled_from(["", "    ", "> ", " " * 31]),
+)
+def test_wrap_para_matches_textwrap(para, width, indent):
+    """The dispatcher equals textwrap on any paragraph without Unicode
+    whitespace: one-line fits, the fast wrap, and the textwrap fallback
+    (hyphens, tabs, CR, VT, FF)."""
+    assert C._wrap_para(para, width, indent) == _textwrap(para, width, indent)
+
+
+def _greedy_wrap(para, width, indent):
+    """The converter's original word-by-word greedy wrap."""
+    lines, cur, cur_len, avail = [], [], 0, width
+    for word in para.split(" "):
+        add = len(word) + 1 if cur else len(word)
+        if not cur or cur_len + add <= avail:
+            cur.append(word)
+            cur_len += add
+        else:
+            lines.append(" ".join(cur))
+            avail = width - len(indent)
+            cur, cur_len = [word], len(word)
+    if cur:
+        lines.append(" ".join(cur))
+    return lines[:1] + [indent + line for line in lines[1:]]
+
+
+def _original_wrap_para(para, width, indent):
+    """The converter's original dispatch: the greedy wrap for single-spaced
+    paragraphs with no hyphen, no whitespace at either end and no tab, CR,
+    VT or FF; textwrap for the rest."""
+    if (
+        "-" not in para
+        and "  " not in para
+        and para == para.strip()
+        and not any(c in para for c in "\t\r\x0b\x0c")
+    ):
+        return _greedy_wrap(para, width, indent)
+    return _textwrap(para, width, indent)
+
+
+def _check_original_wrap(para, width, indent):
+    try:
+        expected = _original_wrap_para(para, width, indent)
+    except ValueError:  # textwrap rejects a width below 1
+        with pytest.raises(ValueError):
+            C._wrap_para(para, width, indent)
+        return
+    assert C._wrap_para(para, width, indent) == expected, (para, width, indent)
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    para=st.text(
+        alphabet=st.sampled_from(
+            list("ab-. \t\r\x0b\x0cé\xa0\u2003\u3000\x1c\u200b")
+        ),
+        min_size=1,  # optwrap never wraps an empty paragraph
+        max_size=60,
+    ),
+    width=st.integers(min_value=-1, max_value=30),
+    indent=st.sampled_from(["", "    ", "> ", " " * 31]),
+)
+def test_wrap_para_matches_original_dispatch(para, width, indent):
+    """Byte identity with the converter's original wrap on any paragraph,
+    Unicode whitespace and widths below 1 included: textwrap drops a word
+    of only Unicode whitespace at a line break, the greedy wrap keeps it."""
+    _check_original_wrap(para, width, indent)
+
+
+@pytest.mark.parametrize(
+    "para",
+    ["a \xa0", "\xa0", "a\u2003", "\u3000 b c", "a b \u2003 c d", "a \xa0 b"],
+)
+def test_wrap_para_non_ascii_whitespace_matches_original(para):
+    for width in (0, 1, 2, 3, 5, 80):
+        for indent in ("", "> "):
+            _check_original_wrap(para, width, indent)
+
+
+def test_every_whitespace_but_space_is_unprintable():
+    # _wrap_para's textwrap-equal fast path takes printable paragraphs only
+    for cp in range(sys.maxunicode + 1):
+        ch = chr(cp)
+        if ch.isspace() and ch != " ":
+            assert not ch.isprintable(), hex(cp)
 
 
 def test_wrap_para_dispatches_hyphens_to_textwrap():

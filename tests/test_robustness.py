@@ -62,3 +62,12 @@ def test_skipwrap_line_with_interior_plus_preserved():
     # outside a list context is still suppressed like upstream
     out2 = convert("<p>before</p><pre>x + y = z</pre><p>after</p>", Config())
     assert "x + y = z" in out2 and "before" in out2 and "after" in out2
+
+
+def test_stray_blockquote_close_adds_no_quote_prefix():
+    # a close tag without an open one takes the depth below zero; that
+    # must not prefix later lines with "> " or " "
+    assert convert("</blockquote><p>a</p><p>b</p>") == "a\n\nb\n\n"
+    assert convert(
+        "<p>x</p></blockquote></blockquote><h2>t</h2><br>y"
+    ) == "x\n\n## t\n\n  \ny\n\n"

@@ -1,4 +1,4 @@
-"""End-to-end Spark pipeline tests: fixture parity through mapInPandas,
+"""End-to-end Spark pipeline tests: fixture parity through mapInArrow,
 interleaved media preservation, metrics, skew salting, checkpoint/resume."""
 
 import os
@@ -135,7 +135,7 @@ def test_adapt_flat_documents(spark):
 def test_output_pruned_twins_match_extract(spark):
     """extract_metrics_only / extract_markdown_only run the identical
     per-row conversion as extract() but never build or Arrow-ship the
-    span structs (mapInPandas output is opaque to Catalyst's column
+    span structs (mapInArrow output is opaque to Catalyst's column
     pruning).  Twin outputs must be value-equal to the full projection --
     including a malformed row and a media-interleaved row."""
     from html2text_spark.pipeline import (
@@ -212,6 +212,33 @@ def test_output_pruned_twins_match_extract(spark):
     )
     assert {(r["doc_id"], r["lang"]) for r in rows} == {("1", "en"), ("2", "fr")}
     assert all(r["spans"] >= 1 for r in rows)
+
+    # the twins take extract's skew-defusal and passthrough parameters
+    salted = {
+        r["doc_id"]: r["m"]
+        for r in extract_metrics_only(docs, salt_partitions=3)
+        .select(
+            "doc_id",
+            F.struct(
+                "metrics.spans", "metrics.bytes_in", "metrics.malformed"
+            ).alias("m"),
+        )
+        .collect()
+    }
+    assert salted == want_metrics
+    stratified = extract_metrics_only(
+        synthetic_documents(spark, 20, seed=5),
+        salt_partitions=3,
+        stratify_bytes=4096,
+    )
+    assert stratified.count() == 20
+    with_lang = adapt_flat_documents(flat, keep=("lang",))
+    md = extract_markdown_only(with_lang, passthrough=("lang",)).collect()
+    want = {r["doc_id"]: r["markdown"] for r in text_of(extract(with_lang)).collect()}
+    assert {(r["doc_id"], r["lang"], r["markdown"]) for r in md} == {
+        ("1", "en", want["1"]),
+        ("2", "fr", want["2"]),
+    }
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -1,7 +1,10 @@
 """Scalar-function unit tests, vectors from the reference UtilsTest
 (/root/reference/tests/UtilsTest.php:12-191)."""
 
+import itertools
+
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from html2text_spark.core import constants, utils
 
@@ -110,6 +113,57 @@ def test_escape_md_section():
         utils.escape_md_section("Use (parentheses) and #hash!", snob=True)
         == "Use \\(parentheses\\) and \\#hash\\!"
     )
+
+
+def test_escape_md_guard_fires_on_every_escaped_char():
+    # escape_md scans for MD_CHARS before the regex; any character the
+    # regex escapes must be in that scan
+    for cp in range(0x3000):
+        ch = chr(cp)
+        text = "a" + ch + "b"
+        assert utils.escape_md(text) == constants.RE_MD_CHARS_MATCHER.sub(
+            r"\\\1", text
+        ), hex(cp)
+
+
+def test_escape_md_section_guard_fires_on_every_line_marker():
+    # every string of up to 4 characters over the markers' alphabet (incl.
+    # a non-ASCII digit and whitespace): the guarded path equals the regex
+    alphabet = " \t\n\xa01\u0663a.+-*"
+    for n in range(5):
+        for chars in itertools.product(alphabet, repeat=n):
+            text = "".join(chars)
+            assert utils.escape_md_section(text) == utils._RE_MD_LINE_MARKER.sub(
+                utils._line_marker_repl, text
+            ), repr(text)
+
+
+def _skipwrap_by_regex(para, wrap_links, wrap_list_items, wrap_tables):
+    """skipwrap as the reference writes it, one regex per case."""
+    if not wrap_links and constants.RE_LINK.search(para):
+        return True
+    if para.startswith("    ") or para.startswith("\t"):
+        return True
+    stripped = para.lstrip()
+    if stripped.startswith("--") and len(stripped) > 2 and stripped[2] != "-":
+        return False
+    if stripped.startswith("-") or stripped.startswith("*"):
+        if not stripped.startswith("**"):
+            return not wrap_list_items
+    if not wrap_tables and constants.RE_TABLE.search(para):
+        return True
+    if constants.RE_ORDERED_LIST_MATCHER.match(stripped):
+        return True
+    return constants.RE_UNORDERED_LIST_MATCHER.match(stripped) is not None
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    para=st.text(alphabet=" \t\xa0-*+1\u0663.|[]()a", max_size=10),
+    flags=st.tuples(st.booleans(), st.booleans(), st.booleans()),
+)
+def test_skipwrap_matches_regex_form(para, flags):
+    assert utils.skipwrap(para, *flags) == _skipwrap_by_regex(para, *flags)
 
 
 def test_reformat_table():
