@@ -1155,12 +1155,6 @@ class _Parser(HTMLParser):
         self.pbr()
         self.o("", force="end")
 
-    def finish(self) -> str:
-        self.flush()
-        outtext = "".join(self.outtextlist)
-        nbsp = "\u00a0" if self.cfg.unicode_snob else " "
-        return outtext.replace(constants.NBSP_PLACEHOLDER, nbsp)
-
 
 def _is_punctuation(ch: str) -> bool:
     """Unicode general-category P test (the reference's \\p{P})."""
@@ -1344,30 +1338,11 @@ def _dispatch_events(parser: "_Parser", events: list) -> None:
             handle_tag(ev[1], {}, False)
 
 
-def _feed_document(parser: "_Parser", processed: str) -> None:
-    """Feed one complete pre-processed document: fast regex tokenizer when
-    eligible, html.parser.HTMLParser otherwise (identical event streams --
-    see _fast_tokenize)."""
-    events = None if _FORCE_FALLBACK else _fast_tokenize(processed)
-    if events is None:
-        parser.feed(processed)
-        return
-    _dispatch_events(parser, events)
-
-
 def convert(html_text: str, cfg: Optional[Config] = None) -> str:
-    """Convert one HTML document to markdown-formatted plain text."""
-    cfg = cfg or Config()
-    html_text = html_text.strip()
-    if not html_text:
-        return ""
-    parser = _Parser(cfg)
-    _feed_document(parser, _preprocess_entities(html_text))
-    parser.close()
-    result = optwrap(parser.finish(), cfg)
-    if cfg.pad_tables:
-        return utils.pad_tables_in_text(result)
-    return result
+    """Convert one HTML document to markdown-formatted plain text: the
+    'text' spans of ``convert_spans`` on the stripped document."""
+    spans = convert_spans([("html", html_text.strip(), "")], cfg)
+    return "".join(text for kind, text, _media in spans if kind == "text")
 
 
 def convert_spans(
@@ -1430,36 +1405,36 @@ def convert_spans(
     if run:
         coalesced.append(("html", "".join(run), ""))
     spans = coalesced
-    multi_fragment = sum(1 for k, _t, _m in spans if k == "html") > 1
-    # fast path for interleaved documents: if EVERY html fragment
-    # fast-tokenizes on its own, no fragment ends mid-token (the fast
-    # tokenizer rejects dangling '<'/unterminated constructs), so direct
-    # event dispatch is event-identical to HTMLParser's incremental
-    # feed -- which is only needed when a tag genuinely straddles a
-    # media boundary, and that case falls back whole-document below.
-    # Differentially fuzzed in tests/test_fast_tokenizer.py.
-    frag_events: Dict[int, Optional[list]] = {}
-    if multi_fragment and not _FORCE_FALLBACK:
-        for i, (kind, text, _media) in enumerate(spans):
-            if kind != "html":
-                continue
-            events = _fast_tokenize(_preprocess_entities(text))
-            if events is None:
-                frag_events.clear()
+    # one rule for every document: if EVERY html fragment fast-tokenizes
+    # on its own, no fragment ends mid-token (the fast tokenizer rejects
+    # dangling '<'/unterminated constructs), so direct event dispatch is
+    # event-identical to HTMLParser's incremental feed; otherwise every
+    # fragment goes to HTMLParser, whose buffer carries a tag that
+    # straddles a media boundary.  Differentially fuzzed in
+    # tests/test_fast_tokenizer.py.
+    html = {
+        i: _preprocess_entities(text)
+        for i, (kind, text, _media) in enumerate(spans)
+        if kind == "html"
+    }
+    events: Dict[int, list] = {}
+    if not _FORCE_FALLBACK:
+        for i, text in html.items():
+            tokens = _fast_tokenize(text)
+            if tokens is None:
+                events.clear()
                 break
-            frag_events[i] = events
+            events[i] = tokens
+    fast = bool(events)
+    if fast:
+        html.clear()
+    # each fragment is released once fed, before the join and wrap passes
     for i, (kind, text, media) in enumerate(spans):
         if kind == "html":
-            if multi_fragment:
-                if frag_events:
-                    _dispatch_events(parser, frag_events[i])
-                else:
-                    # a fragment may split mid-tag across a media
-                    # boundary; HTMLParser's incremental buffer handles
-                    # that, the fast tokenizer does not
-                    parser.feed(_preprocess_entities(text))
+            if fast:
+                _dispatch_events(parser, events.pop(i))
             else:
-                _feed_document(parser, _preprocess_entities(text))
+                parser.feed(html.pop(i))
         elif kind == "media":
             # flush the pending paragraph break so the segment ends on a
             # clean line boundary before the media asset

@@ -16,8 +16,7 @@ no Python in the row loop) so they survive a 100 TB corpus:
                      all-pairs-within-group variant here is for small
                      grouped corpora / verification)
   * simhash64        Arrow-batched pandas UDF (bit-vote loop is not
-                     expressible as built-ins); 64-bit fingerprint with
-                     hamming-distance banding
+                     expressible as built-ins); 64-bit fingerprint
 """
 
 from __future__ import annotations
@@ -378,21 +377,6 @@ def cluster_representatives(
     )
 
 
-def canonical_filter(
-    corpus: DataFrame, pairs: DataFrame, doc_id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop near-duplicates from a corpus given candidate pairs: keeps
-    every document that is either unclustered (appears in no pair) or its
-    cluster's canonical member.  One anti-join on the (small) non-
-    canonical member set -- the corpus itself is never shuffled twice."""
-    losers = resolve_clusters(pairs).filter(~F.col("is_canonical"))
-    return corpus.join(
-        losers.select(F.col("doc_id").alias(doc_id_col)),
-        on=doc_id_col,
-        how="left_anti",
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     group_col: str,
@@ -479,56 +463,6 @@ def simhash64(
         return texts.map(one)
 
     return df.select(doc_id_col, _simhash(F.col(text_col)).alias("simhash"))
-
-
-def simhash_near_dups(
-    df: DataFrame, max_hamming: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, banded for scale.
-
-    Pigeonhole: if hamming(a,b) <= max_hamming, at least one of
-    (max_hamming+1) disjoint 16-bit bands is equal -> self-join per band,
-    verify exact hamming with bit_count (built-in) after the join.
-    """
-    hashed = simhash64(df, text_col)
-    bands = max_hamming + 1
-    width = 64 // bands
-    banded = hashed.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftrightunsigned(
-                            F.col("simhash"), b * width
-                        ).bitwiseAND(F.lit((1 << width) - 1)).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_idx", "band.band_key")
-    l, r = banded.alias("l"), banded.alias("r")
-    hamming = F.bit_count(
-        F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-    )
-    return (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
 
 
 def edit_distance_verify(

@@ -241,11 +241,15 @@ def salt_by_size(df: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def spans_bytes_col(spans_col: str = "spans"):
-    """Approximate document weight: total text bytes across spans."""
-    return F.aggregate(
-        F.transform(spans_col, lambda s: F.length(s["text"])),
+    """Approximate document weight: total text bytes across spans; 0 for
+    a NULL ``spans``, so salt_stratified's small tier keeps that row."""
+    return F.coalesce(
+        F.aggregate(
+            F.transform(spans_col, lambda s: F.length(s["text"])),
+            F.lit(0),
+            lambda acc, x: acc + F.coalesce(x, F.lit(0)),
+        ),
         F.lit(0),
-        lambda acc, x: acc + F.coalesce(x, F.lit(0)),
     )
 
 
@@ -405,21 +409,6 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
         F.sum("metrics.bytes_in").alias("bytes_in_total"),
         F.avg(F.col("metrics.malformed").cast("int")).alias("malformed_rate"),
         F.sum("metrics.ms").alias("convert_ms_total"),
-    )
-
-
-def per_partition_metrics(extracted: DataFrame) -> DataFrame:
-    """Same metrics grouped by physical partition (lineage manifests)."""
-    return (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("metrics.spans").alias("spans_total"),
-            F.sum("metrics.bytes_in").alias("bytes_in_total"),
-            F.sum(F.col("metrics.malformed").cast("int")).alias("malformed_docs"),
-            F.sum("metrics.ms").alias("convert_ms_total"),
-        )
     )
 
 

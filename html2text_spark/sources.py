@@ -1,4 +1,4 @@
-"""Corpus sources: parquet/Iceberg scans, fixture corpus, synthetic generator.
+"""Corpus sources: parquet/Iceberg scans, synthetic generator.
 
 In production the input is an Iceberg table of interleaved text+media
 documents (BASELINE.json input_hint); in this sandbox the same shape is
@@ -15,7 +15,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fixtures import iter_fixtures
 from .pipeline import INPUT_SCHEMA
 
 
@@ -65,15 +64,6 @@ def read_flat_documents(spark: SparkSession, path: str) -> DataFrame:
             .csv(path)
         )
     return spark.read.parquet(path)
-
-
-def fixture_documents(spark: SparkSession) -> DataFrame:
-    """The 78 reference golden fixtures as one-span documents."""
-    rows = [
-        (name, [{"kind": "html", "text": html, "media_ref": "", "offset": 0}])
-        for name, html, _expected, _cfg in iter_fixtures()
-    ]
-    return spark.createDataFrame(rows, INPUT_SCHEMA)
 
 
 def adapt_flat_documents(
@@ -194,28 +184,6 @@ def synthetic_documents(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: Optional[str] = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join key.
-
-    At warehouse scale the same fact tables join on the same keys every
-    day; bucketing both sides identically lets every subsequent join run
-    WITHOUT a shuffle -- each task reads matching buckets from both
-    sides.  The write pays one up-front hash distribution; every join
-    after that is exchange-free (verified in
-    tests/test_plans.py::test_bucketed_join_avoids_shuffle).
-    """
-    writer = df.write.bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.mode("overwrite").format("parquet").saveAsTable(table)
-
-
 def zorder_key(c0, c1, bits: int = 16):
     """Morton / Z-order interleaved key of two non-negative integer
     dimensions (c0 -> even bits, c1 -> odd bits; ``bits`` low bits of
@@ -246,90 +214,6 @@ def zorder_key(c0, c1, bits: int = 16):
             F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return reduce(lambda x, y: x.bitwiseOR(y), terms)
-
-
-def register_fixture_datasource(spark: SparkSession) -> None:
-    """Register the ``golden_fixtures`` Python Data Source (Spark 4 API).
-
-    Exposes the reference's 78 golden .html/.md pairs as a first-class
-    Spark table source -- ``spark.read.format("golden_fixtures")`` --
-    demonstrating the custom-source surface (schema declaration,
-    input-partition planning, per-partition iterators) on the corpus
-    that defines this engine's correctness.  The fixture set is a test
-    corpus, so a handful of planned partitions is the honest scale
-    shape; a production source would plan partitions from file listings
-    the same way.
-
-    Defined lazily inside the function: the datasource base classes
-    import pyspark internals that should not load at package import.
-    """
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
-    class _FixtureReader(DataSourceReader):
-        def __init__(self, n_parts: int = 4):
-            self._n = n_parts
-
-        def partitions(self):
-            # plan from the file listing ONCE (driver side) and hand
-            # each partition its own name subset -- each fixture file is
-            # then opened exactly once, by exactly one task (reading the
-            # whole corpus per partition and filtering by index would be
-            # n_parts x the IO)
-            import os
-
-            from html2text_spark.fixtures import FIXTURE_DIR
-
-            names = sorted(
-                f[: -len(".html")]
-                for f in os.listdir(FIXTURE_DIR)
-                if f.endswith(".html")
-            )
-            return [
-                InputPartition(names[i :: self._n]) for i in range(self._n)
-            ]
-
-        def read(self, partition):
-            import os
-
-            from html2text_spark.fixtures import (
-                FIXTURE_DIR,
-                cleanup_eol,
-                config_for_fixture,
-            )
-
-            for name in partition.value:
-                with open(
-                    os.path.join(FIXTURE_DIR, name + ".html"),
-                    encoding="utf-8",
-                ) as f:
-                    html = cleanup_eol(f.read())
-                md_path = os.path.join(FIXTURE_DIR, name + ".md")
-                expected = ""
-                if os.path.exists(md_path):
-                    with open(md_path, encoding="utf-8") as f:
-                        expected = cleanup_eol(f.read()).rstrip()
-                cfg = config_for_fixture(name + ".html")
-                yield (name, html, expected, str(getattr(cfg, "body_width", 78)))
-
-    class GoldenFixtureSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "golden_fixtures"
-
-        def schema(self):
-            return (
-                "name string, html string, expected_md string, "
-                "body_width string"
-            )
-
-        def reader(self, schema):
-            return _FixtureReader()
-
-    spark.dataSource.register(GoldenFixtureSource)
 
 
 def read_media_files(

@@ -55,7 +55,7 @@ def cms_words_complete(
 
     sketch = run_finite_stream(
         spark,
-        docs.select("text"),
+        [docs.select("text")],
         lambda s: cms_words_stream(s, depth=depth, width=width),
         query_name,
         output_mode="complete",

@@ -56,27 +56,20 @@ def segment_rollup_complete(
     spark,
     events: DataFrame,
     customer: DataFrame,
-    work_dir: str = None,
     query_name: str = "segment_rollup_complete",
 ) -> DataFrame:
     """Run the stream-static rollup over a finite event set and emit
     every real window (clock row matches no customer; see module
     docstring)."""
-    from .harness import run_finite_stream
+    from .harness import clock_horizon, run_finite_stream, with_clock_events
 
-    horizon = events.agg(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).collect()[0]["m"]
-    clock = spark.createDataFrame(
-        [(int(-1), horizon, "__clock__", 0.0)],
-        "user_id long, ts timestamp, event_type string, value double",
-    ).withColumn("ts", F.timestamp_add("DAY", F.lit(10), F.col("ts")))
-    cols = ["user_id", "ts", "event_type", "value"]
-    staged = events.select(*cols).unionAll(clock.select(*cols))
+    _last, clock = clock_horizon(events)
+    staged = with_clock_events(
+        events, spark.createDataFrame([(-1,)], "user_id long"), clock
+    )
     return run_finite_stream(
         spark,
-        staged,
+        [staged],
         lambda s: segment_rollup_stream(s, customer),
         query_name,
-        work_dir,
     )

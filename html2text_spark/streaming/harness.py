@@ -1,8 +1,8 @@
 """Finite-input streaming completion harness, shared by every
-streamed-vs-oracle query (sessions, windowed rollup, dedup).
+streamed-vs-oracle query (sessions, windowed rollup, dedup, joins).
 
-Stages the finite DataFrame as ONE parquet file and runs the stream over
-it with Trigger.AvailableNow into a memory sink.  The single file is
+Stages each finite input DataFrame as ONE parquet file and runs the
+stream over them with Trigger.AvailableNow into a memory sink.  The single file is
 load-bearing: the file source admits one file's rows atomically, so
 exactly one micro-batch sees all data -- a multi-file stage could admit
 watermark-advancing rows (the far-future clock events the completion
@@ -17,9 +17,14 @@ import contextlib
 import os
 import shutil
 import tempfile
-from typing import Callable, Optional
+from datetime import datetime
+from typing import Callable, Sequence, Tuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+#: clock rows sit this many days past the last real event
+CLOCK_DAYS = 10
 
 
 @contextlib.contextmanager
@@ -50,64 +55,22 @@ def _state_partitions(spark):
 
 def run_finite_stream(
     spark,
-    staged: DataFrame,
-    stream_fn: Callable[[DataFrame], DataFrame],
+    inputs: Sequence[DataFrame],
+    stream_fn: Callable[..., DataFrame],
     query_name: str,
-    work_dir: Optional[str] = None,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Write ``staged`` as one file, apply ``stream_fn`` to a readStream
-    of it, drain with availableNow into memory sink ``query_name`` and
-    return the resulting table."""
-    cleanup = work_dir is None
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="h2t_stream_")
-    try:
-        in_dir = os.path.join(work_dir, "in")
-        staged.coalesce(1).write.mode("overwrite").parquet(in_dir)
-        stream = spark.readStream.schema(
-            spark.read.parquet(in_dir).schema
-        ).parquet(in_dir)
-        with _state_partitions(spark):
-            q = (
-                stream_fn(stream)
-                .writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if cleanup:
-            # the memory sink holds the rows; the staged input is
-            # disposable -- removed even when the query fails, so
-            # repeated failing runs can't accumulate corpus copies
-            shutil.rmtree(work_dir, ignore_errors=True)
-    return spark.table(query_name)
+    """Stage each of ``inputs`` as ONE parquet file, apply ``stream_fn``
+    to one readStream per input (in order), drain with availableNow into
+    memory sink ``query_name`` and return the resulting table.
 
-
-def run_finite_stream2(
-    spark,
-    staged_a: DataFrame,
-    staged_b: DataFrame,
-    stream_fn: Callable[[DataFrame, DataFrame], DataFrame],
-    query_name: str,
-    work_dir: Optional[str] = None,
-    output_mode: str = "append",
-) -> DataFrame:
-    """Two-input variant for stream-stream operators (joins): each side
-    is staged as ONE parquet file so the first micro-batch admits BOTH
-    sides' rows atomically -- no row can be declared late by a watermark
-    that a prior batch already advanced (same invariant as the
-    single-input harness, applied per side)."""
-    cleanup = work_dir is None
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="h2t_stream2_")
+    With several inputs (stream-stream joins) each side is its own file,
+    so the first micro-batch admits every side's rows atomically."""
+    stage_dir = tempfile.mkdtemp(prefix="h2t_stream_")
     try:
         streams = []
-        for name, staged in (("a", staged_a), ("b", staged_b)):
-            in_dir = os.path.join(work_dir, name)
+        for i, staged in enumerate(inputs):
+            in_dir = os.path.join(stage_dir, str(i))
             staged.coalesce(1).write.mode("overwrite").parquet(in_dir)
             streams.append(
                 spark.readStream.schema(
@@ -125,6 +88,37 @@ def run_finite_stream2(
             )
             q.awaitTermination()
     finally:
-        if cleanup:
-            shutil.rmtree(work_dir, ignore_errors=True)
+        # the memory sink holds the rows; the staged input is
+        # disposable -- removed even when the query fails, so
+        # repeated failing runs can't accumulate corpus copies
+        shutil.rmtree(stage_dir, ignore_errors=True)
     return spark.table(query_name)
+
+
+def clock_horizon(events: DataFrame) -> Tuple[datetime, datetime]:
+    """(last real event time, clock time ``CLOCK_DAYS`` later) of an
+    event table with a ``ts`` column, in one aggregation.
+
+    Completion harnesses append clock rows at the clock time: far enough
+    past every real event that the watermark they push closes every real
+    window, session and interval."""
+    last = F.max(F.col("ts").cast("timestamp"))
+    row = events.agg(
+        last, F.timestamp_add("DAY", F.lit(CLOCK_DAYS), last)
+    ).collect()[0]
+    return row[0], row[1]
+
+
+def with_clock_events(
+    events: DataFrame, users: DataFrame, clock: datetime
+) -> DataFrame:
+    """``events`` as (user_id, ts, event_type, value) plus one
+    ``__clock__`` event at ``clock`` per row of ``users`` (user_id)."""
+    cols = ["user_id", "ts", "event_type", "value"]
+    clock_rows = users.select(
+        "user_id",
+        F.lit(clock).alias("ts"),
+        F.lit("__clock__").alias("event_type"),
+        F.lit(0.0).alias("value"),
+    )
+    return events.select(*cols).unionAll(clock_rows)

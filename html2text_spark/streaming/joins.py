@@ -28,7 +28,7 @@ canonical impression x conversion join:
   window width, not corpus size.
 
 ``attribution_join_complete`` stages each side as one file (see
-harness.run_finite_stream2 for why single-file staging is
+harness.run_finite_stream for why single-file staging is
 load-bearing) and returns the drained memory-sink table.
 """
 
@@ -96,7 +96,6 @@ def attribution_join_complete(
     spark,
     events: DataFrame,
     window_minutes: int = 120,
-    work_dir: str = None,
     query_name: str = "attribution_join_complete",
 ) -> DataFrame:
     """Run the stream-stream attribution join over a finite event set.
@@ -105,18 +104,16 @@ def attribution_join_complete(
     availableNow pass over the two single-file stages yields every pair
     and the result equals the batch interval join bit-for-bit.
     """
-    from .harness import run_finite_stream2
+    from .harness import run_finite_stream
 
     cols = ["event_id", "ts", "user_id"]
     views = events.filter(F.col("event_type") == "view").select(*cols)
     clicks = events.filter(F.col("event_type") == "click").select(*cols)
-    return run_finite_stream2(
+    return run_finite_stream(
         spark,
-        views,
-        clicks,
+        [views, clicks],
         lambda v, c: attribution_join_stream(v, c, window_minutes),
         query_name,
-        work_dir=work_dir,
     )
 
 
@@ -124,7 +121,6 @@ def attribution_outer_complete(
     spark,
     events: DataFrame,
     window_minutes: int = 120,
-    work_dir: str = None,
     query_name: str = "attribution_outer_complete",
 ) -> DataFrame:
     """Run the LEFT OUTER stream-stream attribution join to completion.
@@ -134,7 +130,7 @@ def attribution_outer_complete(
     arrive (view_ts + window < watermark).  Completion therefore needs
     the same far-future clock trick as the sessionizer, on BOTH input
     streams (the join's effective watermark is the minimum across
-    inputs): one clock row per side, 10 days past the data horizon.
+    inputs): one clock row per side, ``CLOCK_DAYS`` past the data horizon.
     The clock view's own null-extension row is identified by its
     FABRICATED timestamp (view_ts == the future horizon, impossible for
     real data by construction) rather than by a sentinel id -- an id
@@ -142,27 +138,21 @@ def attribution_outer_complete(
     ids.  After the no-data batch the streamed output equals the batch
     LEFT interval join exactly.
     """
-    from .harness import run_finite_stream2
+    from .harness import clock_horizon, run_finite_stream
 
     cols = ["event_id", "ts", "user_id"]
     views = events.filter(F.col("event_type") == "view").select(*cols)
     clicks = events.filter(F.col("event_type") == "click").select(*cols)
-    horizon = events.agg(
-        F.timestamp_add(
-            "DAY", F.lit(10), F.max(F.col("ts").cast("timestamp"))
-        ).alias("m")
-    ).collect()[0]["m"]
+    _last, clock = clock_horizon(events)
     clock_schema = "event_id long, ts timestamp, user_id long"
-    clock_v = spark.createDataFrame([(-1, horizon, -1)], clock_schema)
-    clock_c = spark.createDataFrame([(-2, horizon, -2)], clock_schema)
-    out = run_finite_stream2(
+    clock_v = spark.createDataFrame([(-1, clock, -1)], clock_schema)
+    clock_c = spark.createDataFrame([(-2, clock, -2)], clock_schema)
+    out = run_finite_stream(
         spark,
-        views.unionAll(clock_v),
-        clicks.unionAll(clock_c),
+        [views.unionAll(clock_v), clicks.unionAll(clock_c)],
         lambda v, c: attribution_join_stream(
             v, c, window_minutes, how="left_outer"
         ),
         query_name,
-        work_dir=work_dir,
     )
-    return out.filter(F.col("view_ts") < F.lit(horizon))
+    return out.filter(F.col("view_ts") < F.lit(clock))

@@ -195,16 +195,14 @@ def kmv_events_complete(
     they advance time without ever entering a sketch -- the streamed
     output equals batch ``kmv_distinct`` exactly.
     """
-    from .harness import run_finite_stream
+    from .harness import clock_horizon, run_finite_stream
 
-    horizon = events.agg(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).collect()[0]["m"]
+    horizon, clock_ts = clock_horizon(events)
     clock = (
         events.select(group_col).distinct()
         .select(
             group_col,
-            (F.lit(horizon) + F.expr("interval 10 days")).alias("ts"),
+            F.lit(clock_ts).alias("ts"),
             F.lit(None).cast("long").alias(key_col),
         )
     )
@@ -213,7 +211,7 @@ def kmv_events_complete(
     ).unionByName(clock)
     out = run_finite_stream(
         spark,
-        staged,
+        [staged],
         lambda s: kmv_stream(
             s, key_col=key_col, group_col=group_col, k=k, horizon=horizon
         ),

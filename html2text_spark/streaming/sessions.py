@@ -169,7 +169,6 @@ def sessionize_events_complete(
     spark,
     events: DataFrame,
     gap_minutes: int = 30,
-    work_dir: str = None,
     query_name: str = "sessions_complete",
 ) -> DataFrame:
     """Run the STREAMING sessionizer over a finite event set and emit
@@ -194,33 +193,18 @@ def sessionize_events_complete(
     ``sessionize_stream`` has no such assumption -- this helper is the
     finite-input completion harness.)
     """
-    from .harness import run_finite_stream
+    from .harness import clock_horizon, run_finite_stream, with_clock_events
 
-    horizon = events.agg(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).collect()[0]["m"]
-    clock = (
-        events.select("user_id")
-        .distinct()
-        .select(
-            "user_id",
-            F.lit(horizon)
-            .cast("timestamp")
-            .alias("ts"),
-            F.lit("__clock__").alias("event_type"),
-            F.lit(0.0).alias("value"),
-        )
-        .withColumn("ts", F.timestamp_add("DAY", F.lit(10), F.col("ts")))
-    )
-    cols = ["user_id", "ts", "event_type", "value"]
+    _last, clock = clock_horizon(events)
     # the shared harness stages ONE file => ONE micro-batch: a
     # multi-file stage could admit clock rows before real events, jump
-    # the watermark 10 days ahead and silently drop the rest as late
-    staged = events.select(*cols).unionAll(clock.select(*cols))
+    # the watermark past them and silently drop the rest as late
+    staged = with_clock_events(
+        events, events.select("user_id").distinct(), clock
+    )
     return run_finite_stream(
         spark,
-        staged,
+        [staged],
         lambda s: sessionize_stream(s, gap_minutes=gap_minutes),
         query_name,
-        work_dir,
     )

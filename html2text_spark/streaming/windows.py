@@ -70,7 +70,6 @@ def distinct_users_stream(events_stream: DataFrame) -> DataFrame:
 def distinct_users_complete(
     spark,
     events: DataFrame,
-    work_dir: str = None,
     query_name: str = "distinct_users_complete",
 ) -> DataFrame:
     """Run the streaming dedup over a finite event set (shared harness;
@@ -80,33 +79,26 @@ def distinct_users_complete(
 
     return run_finite_stream(
         spark,
-        events.select("user_id", "ts", "event_type", "value"),
+        [events.select("user_id", "ts", "event_type", "value")],
         distinct_users_stream,
         query_name,
-        work_dir,
     )
 
 
 def hourly_rollup_complete(
     spark,
     events: DataFrame,
-    work_dir: str = None,
     query_name: str = "hourly_rollup_complete",
 ) -> DataFrame:
     """Run the streaming rollup over a finite event set and emit EVERY
     real window (see module docstring; staged via the shared
     single-batch harness)."""
-    from .harness import run_finite_stream
+    from .harness import clock_horizon, run_finite_stream, with_clock_events
 
-    horizon = events.agg(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).collect()[0]["m"]
-    clock = spark.createDataFrame(
-        [(int(-1), horizon, "__clock__", 0.0)],
-        "user_id long, ts timestamp, event_type string, value double",
-    ).withColumn("ts", F.timestamp_add("DAY", F.lit(10), F.col("ts")))
-    cols = ["user_id", "ts", "event_type", "value"]
-    staged = events.select(*cols).unionAll(clock.select(*cols))
+    _last, clock = clock_horizon(events)
+    staged = with_clock_events(
+        events, spark.createDataFrame([(-1,)], "user_id long"), clock
+    )
     return run_finite_stream(
-        spark, staged, hourly_rollup_stream, query_name, work_dir
+        spark, [staged], hourly_rollup_stream, query_name
     )

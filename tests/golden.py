@@ -1,10 +1,10 @@
-"""Golden-fixture corpus loader.
+"""Golden-fixture corpus loader for the tests.
 
 Loads the reference's 78 .html/.md fixture pairs and reproduces the
 per-fixture config inference of the reference test harness
-(/root/reference/tests/Html2MarkdownTest.php:140-297): filename substrings
-select conversion options.  Used by the pytest corpus and by the synthetic
-document generator.
+(``tests/Html2MarkdownTest.php:140-297`` in the reference): filename
+substrings select conversion options.  Used by the pytest corpus and the
+fast-tokenizer and Spark parity tests.
 """
 
 from __future__ import annotations
@@ -13,9 +13,70 @@ import os
 import re
 from typing import Iterator, Tuple
 
-from .core.config import Config, config_from_options
+from html2text_spark.core.config import Config
 
-FIXTURE_DIR = "/root/reference/tests/files"
+#: camelCase aliases used by the reference test harness / FIXTURES.md tables.
+_ALIASES = {
+    "unicodeSnob": "unicode_snob",
+    "escapeSnob": "escape_snob",
+    "linksEachParagraph": "links_each_paragraph",
+    "bodyWidth": "body_width",
+    "bodywidth": "body_width",
+    "skipInternalLinks": "skip_internal_links",
+    "inlineLinks": "inline_links",
+    "protectLinks": "protect_links",
+    "wrapLinks": "wrap_links",
+    "wrapListItems": "wrap_list_items",
+    "wrapTables": "wrap_tables",
+    "googleDoc": "google_doc",
+    "googleListIndent": "google_list_indent",
+    "boldTextStyleValues": "bold_text_style_values",
+    "hideStrikethrough": "hide_strikethrough",
+    "ignoreAnchors": "ignore_anchors",
+    "ignoreMailtoLinks": "ignore_mailto_links",
+    "ignoreImages": "ignore_images",
+    "imagesAsHtml": "images_as_html",
+    "imagesToAlt": "images_to_alt",
+    "imagesWithSize": "images_with_size",
+    "ignoreEmphasis": "ignore_emphasis",
+    "markCode": "mark_code",
+    "backquoteCodeStyle": "backquote_code_style",
+    "defaultImageAlt": "default_image_alt",
+    "padTables": "pad_tables",
+    "useAutomaticLinks": "use_automatic_links",
+    "bypassTables": "bypass_tables",
+    "ignoreTables": "ignore_tables",
+    "singleLineBreak": "single_line_break",
+    "openQuote": "open_quote",
+    "closeQuote": "close_quote",
+    "includeSupSub": "include_sup_sub",
+    "baseUrl": "base_url",
+    "baseurl": "base_url",
+    "ulItemMark": "ul_item_mark",
+    "emphasisMark": "emphasis_mark",
+    "strongMark": "strong_mark",
+    "tagCallback": "tag_callback",
+}
+
+
+def config_from_options(options: dict) -> Config:
+    """Build a Config from camelCase or snake_case option dicts."""
+    normalized = {}
+    for key, value in options.items():
+        key = _ALIASES.get(key, key)
+        if isinstance(value, list):
+            value = tuple(value)
+        normalized[key] = value
+    return Config(**normalized)
+
+
+#: the reference checkout sits next to this repository
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+    "tests",
+    "files",
+)
 
 #: fixture that asserts an exception in the reference (invalid base URL);
 #: our pipeline maps it to metrics.malformed=True instead of failing.

@@ -77,7 +77,7 @@ def test_google_list_indent_option():
 
 
 def test_config_from_options_aliases():
-    from html2text_spark.core.config import config_from_options
+    from golden import config_from_options
 
     cfg = config_from_options(
         {"bodyWidth": 0, "ulItemMark": "-", "baseurl": "http://x/",

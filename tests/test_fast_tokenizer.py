@@ -9,7 +9,7 @@ import pytest
 
 import html2text_spark.core.converter as C
 from html2text_spark.core.config import Config
-from html2text_spark.fixtures import ERROR_FIXTURES, iter_fixtures
+from golden import ERROR_FIXTURES, iter_fixtures
 
 
 def _both_paths(html, cfg=None):

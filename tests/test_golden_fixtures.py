@@ -6,7 +6,7 @@ import pytest
 
 from html2text_spark.core.converter import convert
 from html2text_spark.core.urljoin import InvalidBaseUrl
-from html2text_spark.fixtures import ERROR_FIXTURES, iter_fixtures
+from golden import ERROR_FIXTURES, iter_fixtures
 
 FIXTURES = list(iter_fixtures())
 

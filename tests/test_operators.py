@@ -49,18 +49,6 @@ def test_minhash_lsh_finds_near_duplicates(spark, docs):
     assert recall > 0.8, f"LSH recall too low: {recall}"
 
 
-def test_simhash_near_dups(spark, docs):
-    from html2text_spark.operators.dedup import simhash_near_dups
-
-    base = docs.select("doc_id", "text").limit(30)
-    # exact copies have hamming distance 0
-    copy = base.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
-    pairs = simhash_near_dups(base.unionAll(copy), max_hamming=3).collect()
-    found = {(r["doc_a"], r["doc_b"]) for r in pairs if r["hamming"] == 0}
-    planted = {(i, i + 10000) for i in range(30)}
-    assert planted <= found
-
-
 def test_connected_components_transitive_chain(spark):
     """a<->b and b<->c candidates (NO a<->c pair) must still land all
     three docs in ONE cluster with min-id canonical labeling -- the
@@ -104,19 +92,6 @@ def test_connected_components_raises_on_non_convergence(spark):
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iters=3)
-
-
-def test_canonical_filter_keeps_unclustered_and_canonical(spark, docs):
-    from html2text_spark.operators.dedup import canonical_filter
-
-    corpus = docs.select("doc_id", "text").limit(30)
-    pairs = spark.createDataFrame(
-        [(0, 5), (5, 7), (9, 11)], "doc_a long, doc_b long"
-    )
-    kept = {r["doc_id"] for r in canonical_filter(corpus, pairs).collect()}
-    assert 0 in kept and 9 in kept          # canonical members stay
-    assert 5 not in kept and 7 not in kept and 11 not in kept
-    assert 13 in kept and 29 in kept        # unclustered docs untouched
 
 
 def test_asof_join_semantics(spark):
@@ -1226,13 +1201,37 @@ def test_streaming_dedup_within_watermark_bounded_state(spark):
         )
 
     streamed = run_finite_stream(
-        spark, events, dedup_wm, "t_dedup_within_wm"
+        spark, [events], dedup_wm, "t_dedup_within_wm"
     )
     got = sorted(r["user_id"] for r in streamed.collect())
     want = sorted(
         r["user_id"] for r in events.select("user_id").distinct().collect()
     )
     assert got == want
+
+
+def test_finite_stream_removes_staging_dir_when_query_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The harness stages its inputs in a temporary directory and removes
+    it even when the query fails, so repeated failing runs leave no
+    corpus copies behind; the query's error reaches the caller."""
+    import tempfile
+
+    from html2text_spark.streaming.harness import run_finite_stream
+
+    events = spark.createDataFrame([(1,)], "user_id long")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    staged = []
+
+    def failing(stream):
+        staged.extend(os.listdir(tmp_path))
+        return stream.select("no_such_col")
+
+    with pytest.raises(Exception, match="no_such_col"):
+        run_finite_stream(spark, [events], failing, "t_failing_stream")
+    assert staged and staged[0].startswith("h2t_stream_")
+    assert os.listdir(tmp_path) == []
 
 
 def test_session_window_native_vs_custom_boundary(spark):
@@ -2242,7 +2241,7 @@ def test_cms_stream_equals_batch_sketch(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("text")
     streamed = run_finite_stream(
         spark,
-        docs,
+        [docs],
         lambda s: cms_words_stream(s, depth=3, width=64),
         "cms_eq_batch",
         output_mode="complete",

@@ -185,15 +185,18 @@ def test_bucketed_join_avoids_shuffle(spark):
     ZERO exchanges on the join inputs -- the co-located join path that
     daily warehouse jobs rely on at 100 TB (pay one hash distribution at
     write time, never shuffle the join again)."""
-    from html2text_spark.sources import write_bucketed
-
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         orders = spark.read.parquet(f"{SF}/orders.parquet")
         li = spark.read.parquet(f"{SF}/lineitem.parquet")
-        write_bucketed(orders, "t_orders_bucketed", "o_orderkey", 8)
-        write_bucketed(li, "t_lineitem_bucketed", "l_orderkey", 8)
+        for df, table, key in (
+            (orders, "t_orders_bucketed", "o_orderkey"),
+            (li, "t_lineitem_bucketed", "l_orderkey"),
+        ):
+            df.write.bucketBy(8, key).mode("overwrite").format(
+                "parquet"
+            ).saveAsTable(table)
         joined = (
             spark.table("t_lineitem_bucketed")
             .join(
@@ -313,6 +316,32 @@ def test_salt_stratified_oversubscribed_monsters_balanced(spark):
     counts = {r["p"]: r["count"] for r in placed}
     assert len(counts) == 16, f"only {len(counts)} partitions got monsters"
     assert all(c == 2 for c in counts.values()), counts
+
+
+def test_salt_stratified_keeps_null_spans_documents(spark):
+    """A document whose ``spans`` is NULL has no text weight; every
+    salting mode must keep it with the same metrics as the plain run
+    (stratified salting once dropped it: its NULL weight matched
+    neither tier's filter)."""
+    from html2text_spark.pipeline import INPUT_SCHEMA, extract
+
+    span = {"kind": "html", "text": "<p>x</p>", "media_ref": "", "offset": 0}
+    df = spark.createDataFrame(
+        [("a", [span]), ("b", None), ("c", [span])], INPUT_SCHEMA
+    )
+    runs = [
+        extract(df),
+        extract(df, salt_partitions=4),
+        extract(df, salt_partitions=4, stratify_bytes=1000),
+    ]
+    # every metric but the wall-clock ms
+    got = [
+        {r["doc_id"]: r["metrics"][:3] for r in run.collect()} for run in runs
+    ]
+    assert got[0]["b"] == (0, 0, False)
+    for rows in got:
+        assert sorted(rows) == ["a", "b", "c"]
+        assert rows["b"] == got[0]["b"]
 
 
 def test_routing_keys_route_exactly(spark):

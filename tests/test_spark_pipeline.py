@@ -14,24 +14,19 @@ from html2text_spark.checkpoint import (
 )
 from html2text_spark.core.config import Config
 from html2text_spark.core.converter import convert
-from html2text_spark.fixtures import (
-    ERROR_FIXTURES,
-    iter_fixtures,
-    options_for_fixture,
-)
 from html2text_spark.pipeline import (
     INPUT_SCHEMA,
     extract,
     extraction_metrics,
-    per_partition_metrics,
     salt_by_size,
     text_of,
 )
 from html2text_spark.sources import (
     adapt_flat_documents,
-    fixture_documents,
     synthetic_documents,
 )
+
+from golden import ERROR_FIXTURES, iter_fixtures, options_for_fixture
 
 
 def test_fixture_parity_through_spark(spark):
@@ -97,10 +92,10 @@ def test_metrics_and_partition_metrics(spark):
     assert m["docs"] == 50
     assert m["spans_total"] > 0
     assert m["malformed_rate"] == 0.0
-    pm = per_partition_metrics(ext).collect()
-    assert sum(r["docs"] for r in pm) == 50
+    pm = ext.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert sum(r["count"] for r in pm) == 50
     # salting spread: no partition holds more than half the corpus
-    assert max(r["docs"] for r in pm) < 40
+    assert max(r["count"] for r in pm) < 40
 
 
 def test_malformed_flag(spark):
@@ -554,22 +549,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     # and no row-level Filter on lang remains above the scan
     pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert pushed, plan
-
-
-def test_golden_fixture_datasource(spark):
-    """The Spark 4 Python Data Source surface: the golden corpus reads
-    as a first-class format with planned partitions, and its content
-    matches iter_fixtures exactly."""
-    from html2text_spark.fixtures import iter_fixtures
-    from html2text_spark.sources import register_fixture_datasource
-
-    register_fixture_datasource(spark)
-    df = spark.read.format("golden_fixtures").load()
-    rows = {r["name"]: (r["html"], r["expected_md"]) for r in df.collect()}
-    want = {n: (h, e) for n, h, e, _ in iter_fixtures()}
-    assert rows == want and len(rows) >= 78
-    # the source plans multiple input partitions (distributed read path)
-    assert df.rdd.getNumPartitions() == 4
 
 
 def test_registry_ordering_contract():
