@@ -36,7 +36,7 @@ import re
 import textwrap
 from dataclasses import dataclass
 from html.parser import HTMLParser
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 from . import constants, utils
 from .config import Config
@@ -55,14 +55,6 @@ _STRESSED_BOUNDARY_RE = re.compile(r"[^\[\](){}\s.!?]")
 #: shared read-only empty style dict (see handle_tag)
 _EMPTY_STYLE: Dict[str, str] = {}
 
-#: tags with dedicated dispatch blocks in handle_tag; any other tag is a
-#: pass-through (outside googleDoc mode) and can exit the dispatch early
-_HANDLED_TAGS = frozenset(
-    "p div br hr head style script body blockquote em i u strong b del "
-    "strike s kbd code tt abbr q a img dl dt dd ol ul li table tr td th "
-    "pre sup sub".split()
-) | frozenset("h%d" % i for i in range(1, 10))
-
 
 # ----------------------------------------------------------------------
 # fast tokenizer (regex) with strict eligibility + HTMLParser fallback
@@ -77,12 +69,19 @@ _HANDLED_TAGS = frozenset(
 # aborts to the HTMLParser path for the whole document.  A differential
 # fuzz test (tests/test_fast_tokenizer.py) asserts both paths convert
 # identically on generated and fixture corpora.
+#
+# The attrs group is atomic: a quoted value also matches the unquoted
+# branch, so without it a start tag with n attributes and no closing '>'
+# backtracks through 2**n parses before failing.  A tag that only matches
+# by re-reading a quoted value as unquoted goes to HTMLParser instead.
+# The group is captured inside a lookahead and consumed by a backreference,
+# which is atomic on every Python; ``(?>...)`` needs 3.11.
 
 _FAST_TAG_RE = re.compile(
     r"""<(?:
           (?P<end>/)\s*(?P<ename>[a-zA-Z][a-zA-Z0-9:_.-]*)\s*>
         | (?P<name>[a-zA-Z][a-zA-Z0-9:_.-]*)
-          (?P<attrs>(?:\s+[^\s/>=]+(?:\s*=\s*(?:"[^"]*"|'[^']*'|[^\s>]+))?)*)
+          (?=(?P<attrs>(?:\s+[^\s/>=]+(?:\s*=\s*(?:"[^"]*"|'[^']*'|[^\s>]+))?)*))(?P=attrs)
           \s*(?P<selfclose>/?)>
         | !--(?P<comment>.*?)--\s*>
         | !(?P<decl>[^>]*)>
@@ -207,14 +206,6 @@ class ListElement:
     num: int
 
 
-@dataclass
-class MediaRef:
-    """A media asset surfaced in document order (img src or passthrough)."""
-
-    media_ref: str
-    segment: int  # index of the html segment it was found in
-
-
 class _Parser(HTMLParser):
     """Tokenizer + state machine.  One instance per document."""
 
@@ -242,6 +233,9 @@ class _Parser(HTMLParser):
         self.maybe_automatic_link: Optional[str] = None
         self.empty_link = False
         self.a: List[AnchorElement] = []
+        # footnote entries of self.a with an href, keyed by (href, title
+        # present, title): the pair an anchor must match to share one
+        self.a_index: Dict[tuple, AnchorElement] = {}
         self.acount = 0
         self.outcount = 0
         self.emphasis = 0
@@ -267,8 +261,9 @@ class _Parser(HTMLParser):
         self.td_count = 0
 
         # --- media span tracking (graft addition) ---
-        self.media_refs: List[MediaRef] = []
-        self.segment = 0
+        # media refs of each html segment in document order: its <img>
+        # srcs, then the passthrough media span that ends it
+        self.media: List[List[str]] = [[]]
 
     # ------------------------------------------------------------------
     # tokenizer event entry points
@@ -335,15 +330,8 @@ class _Parser(HTMLParser):
         if converted:
             self.push(converted, entity_char=True)
 
-    # comments / PIs / doctype dropped (boilerplate strip rule #1)
-    def handle_comment(self, data: str) -> None:
-        pass
-
-    def handle_decl(self, decl: str) -> None:
-        pass
-
-    def handle_pi(self, data: str) -> None:
-        pass
+    # comments / PIs / doctype are dropped (boilerplate strip rule #1) by
+    # HTMLParser's own no-op handle_comment/handle_decl/handle_pi
 
     # ------------------------------------------------------------------
     # entity decoding (reference TextProcessor:82-152)
@@ -472,6 +460,53 @@ class _Parser(HTMLParser):
         if not data and force is False:
             return
 
+        bq = ""
+        if self.startpre or self.pre or self.blockquote > 0:
+            data, bq = self._line_prefix(data, force)
+
+        if self.start:
+            self.space = False
+            self.p_p = 0
+            self.start = False
+
+        if force == "end":
+            # It's the end.
+            self.p_p = 0
+            self.out("\n")
+            self.space = False
+
+        outtextlist = self.outtextlist
+        if self.p_p:
+            # ends in bq, or in the newline when there is no bq
+            outtextlist.append((self.br_toggle + "\n" + bq) * self.p_p)
+            self.last_was_nl = not bq
+            self.space = False
+            self.br_toggle = ""
+
+        if self.space:
+            if not self.last_was_nl:
+                outtextlist.append(" ")
+            self.space = False
+
+        if self.a and (
+            (self.p_p == 2 and self.cfg.links_each_paragraph) or force == "end"
+        ):
+            self._flush_links(force == "end")
+
+        if self.abbr_list and force == "end":
+            for abbr, definition in self.abbr_list.items():
+                self.out("  *[" + abbr + "]: " + definition + "\n")
+
+        self.p_p = 0
+        outtextlist.append(data)
+        if data:
+            self.last_was_nl = data[-1] == "\n"
+        self.outcount += 1
+
+    def _line_prefix(self, data: str, force) -> Tuple[str, str]:
+        """Open a pending <pre> block and indent ``data`` inside one.
+        Returns the data and the prefix of each new output line (the
+        blockquote marks, plus the code indent inside <pre>)."""
         if self.startpre:
             if not data.startswith("\n") and not data.startswith("\r\n"):
                 data = "\n" + data
@@ -504,65 +539,37 @@ class _Parser(HTMLParser):
                 data = re.sub(
                     r"^\r?\n" + re.escape(self.pre_indent), "", data, count=1
                 )
+        return data, bq
 
-        if self.start:
-            self.space = False
-            self.p_p = 0
-            self.start = False
-
-        if force == "end":
-            # It's the end.
-            self.p_p = 0
+    def _flush_links(self, end: bool) -> None:
+        """Print the reference links used by earlier output and drop them
+        from self.a and its index."""
+        if end:
             self.out("\n")
-            self.space = False
-
-        outtextlist = self.outtextlist
-        if self.p_p:
-            # ends in bq, or in the newline when there is no bq
-            outtextlist.append((self.br_toggle + "\n" + bq) * self.p_p)
-            self.last_was_nl = not bq
-            self.space = False
-            self.br_toggle = ""
-
-        if self.space:
-            if not self.last_was_nl:
-                outtextlist.append(" ")
-            self.space = False
-
-        if self.a and (
-            (self.p_p == 2 and self.cfg.links_each_paragraph) or force == "end"
-        ):
-            if force == "end":
+        newa = []
+        for link in self.a:
+            if self.outcount > link.outcount:
+                self.out(
+                    "   ["
+                    + str(link.count)
+                    + "]: "
+                    + url_join(self.cfg.base_url, link.attrs.get("href") or "")
+                )
+                title = link.attrs.get("title")
+                if title is not None and str(title).strip():
+                    self.out(" (" + title + ")")
                 self.out("\n")
-            newa = []
-            for link in self.a:
-                if self.outcount > link.outcount:
-                    self.out(
-                        "   ["
-                        + str(link.count)
-                        + "]: "
-                        + url_join(self.cfg.base_url, link.attrs.get("href") or "")
-                    )
-                    title = link.attrs.get("title")
-                    if title is not None and str(title).strip():
-                        self.out(" (" + title + ")")
-                    self.out("\n")
-                else:
-                    newa.append(link)
-            if len(self.a) != len(newa):
-                # don't need an extra line when nothing was done
-                self.out("\n")
-            self.a = newa
-
-        if self.abbr_list and force == "end":
-            for abbr, definition in self.abbr_list.items():
-                self.out("  *[" + abbr + "]: " + definition + "\n")
-
-        self.p_p = 0
-        outtextlist.append(data)
-        if data:
-            self.last_was_nl = data[-1] == "\n"
-        self.outcount += 1
+            else:
+                newa.append(link)
+        if len(self.a) != len(newa):
+            # don't need an extra line when nothing was done
+            self.out("\n")
+            self.a_index = {
+                k: link
+                for k, link in self.a_index.items()
+                if not self.outcount > link.outcount
+            }
+        self.a = newa
 
     def p(self) -> None:
         """Set pretty print to 1 or 2 lines."""
@@ -692,414 +699,393 @@ class _Parser(HTMLParser):
                 if self.tag_stack:
                     self.parent_style = self.tag_stack[-1][2]
 
-        if tag not in _HANDLED_TAGS and not google_doc:
-            # unknown/pass-through tag (span, font, section, ...): none of
-            # the dispatch blocks below fire; only the ol/ul else-branch
-            # side effect remains.  (googleDoc mode must fall through:
-            # add_emphasis inspects the CSS of every element.)
-            self.last_was_list = False
+        # a handler that returns True skips googleDoc's add_emphasis (when
+        # it runs before it) and the list reset below
+        handler, before = _TAG_TABLE.get(tag, (None, False))
+        if before and handler(self, tag, attrs, start):
             return
+        if google_doc and not self.inheader:
+            # handle some font attributes, but leave headers clean
+            self.add_emphasis(start, self.tag_style, self.parent_style)
+        if not before and handler is not None and handler(self, tag, attrs, start):
+            return
+        # the reference's ol/ul else-branch: every tag event that gets here
+        # (no early return, not ol/ul) resets the flag
+        self.last_was_list = False
 
-        # Dispatch: the original reference runs ~20 sequential tag tests
-        # per event; the sets are mutually exclusive (verified below), so
-        # an ordered elif chain is behavior-identical and ~halves the
-        # average compare count on the hottest converter function.  Two
-        # invariants are load-bearing and preserved exactly:
-        #   * googleDoc's add_emphasis runs between the del/strike block
-        #     and the kbd block FOR EVERY TAG -> the chain is split into
-        #     an early and a late group around it;
-        #   * the reference's ol/ul else-branch resets last_was_list for
-        #     every non-ol/ul tag UNLESS an earlier block returned -> the
-        #     reset moved to the end (nothing between reads it), and all
-        #     early returns still skip it.
-        header_level = utils.hn(tag)
-        matched_early = True
-        if header_level > 0:
-            # header inside an 'a' tag (incorrect but found in the wild)
-            if self.astack:
-                if start:
-                    self.inheader = True
-                    # only add '#' if it can appear before '['
-                    if self.outtextlist and self.outtextlist[-1] == "[":
-                        self.outtextlist.pop()
-                        self.space = False
-                        self.o("#" * header_level + " ")
-                        self.o("[")
-                else:
-                    self.p_p = 0  # don't break up link name
-                    self.inheader = False
-                    return  # prevent redundant emphasis marks on headers
-            else:
-                self.p()
-                if start:
-                    self.inheader = True
-                    self.o("#" * header_level + " ")
-                else:
-                    self.inheader = False
-                    self.p()
-                    return  # prevent redundant emphasis marks on headers
+    # One handler per tag family, called as handler(self, tag, attrs,
+    # start); _TAG_TABLE (after the class) says which tags reach it and
+    # whether it runs before or after googleDoc's add_emphasis.
 
-        elif tag in ("p", "div"):
-            if google_doc:
-                if start and utils.google_has_height(self.tag_style):
-                    self.p()
-                else:
-                    self.soft_br()
-            elif self.astack or self.split_next_td:
-                pass
-            else:
-                self.p()
-
-        elif tag == "br":
+    def _tag_heading(self, tag, attrs, start):
+        # header inside an 'a' tag (incorrect but found in the wild)
+        if self.astack:
             if start:
-                # avoid carrying over pending spaces before explicit breaks
-                self.space = False
-                if self.blockquote > 0:
-                    self.o("  \n> ")
-                else:
-                    self.o("  \n")
-
-        elif tag == "hr":
-            if start:
-                self.p()
-                self.o("* * *")
-                self.p()
-
-        elif tag in ("head", "style", "script", "body"):
-            if tag == "body":
-                self.quiet = 0  # sites like 9rules.com never close <head>
+                self.inheader = True
+                # only add '#' if it can appear before '['
+                if self.outtextlist and self.outtextlist[-1] == "[":
+                    self.outtextlist.pop()
+                    self.space = False
+                    self.o("#" * int(tag[1]) + " ")
+                    self.o("[")
             else:
-                if start:
-                    self.quiet += 1
-                else:
-                    self.quiet -= 1
-                if tag == "style":
-                    if start:
-                        self.style += 1
-                    else:
-                        self.style -= 1
-
-        elif tag == "blockquote":
+                self.p_p = 0  # don't break up link name
+                self.inheader = False
+                return True  # prevent redundant emphasis marks on headers
+        else:
+            self.p()
             if start:
-                self.p()
-                self.o("> ", puredata=False, force=True)
-                self.start = True
-                self.blockquote += 1
+                self.inheader = True
+                self.o("#" * int(tag[1]) + " ")
             else:
-                self.blockquote -= 1
+                self.inheader = False
                 self.p()
+                return True  # prevent redundant emphasis marks on headers
 
-        elif tag in ("em", "i", "u"):
-            if not self.cfg.ignore_emphasis:
-                # Separate with a space if we immediately follow an
-                # alphanumeric character, since otherwise Markdown won't
-                # render the emphasis marks ('foo_bar_' stays visible).
-                if (
-                    start
-                    and self.preceding_data
-                    and not self.preceding_data[-1].isspace()
-                    and not _is_punctuation(self.preceding_data[-1])
-                ):
-                    emphasis = " " + self.cfg.emphasis_mark
-                    self.preceding_data += " "
-                else:
-                    emphasis = self.cfg.emphasis_mark
-                self.o(emphasis)
-                if start:
-                    self.stressed = True
+    def _tag_p(self, tag, attrs, start):
+        if self.cfg.google_doc:
+            if start and utils.google_has_height(self.tag_style):
+                self.p()
+            else:
+                self.soft_br()
+        elif not (self.astack or self.split_next_td):
+            self.p()
 
-        elif tag in ("strong", "b"):
-            if not self.cfg.ignore_emphasis:
-                # Separate with space if we immediately follow an *
-                # character, else Markdown won't render the resulting ***.
-                if (
-                    start
-                    and self.preceding_data
-                    # empty strong_mark: the lookup would IndexError
-                    and self.cfg.strong_mark
-                    and self.preceding_data[-1] == self.cfg.strong_mark[0]
-                ):
-                    strong = " " + self.cfg.strong_mark
-                    self.preceding_data += " "
-                else:
-                    strong = self.cfg.strong_mark
-                self.o(strong)
-                if start:
-                    self.stressed = True
+    def _tag_br(self, tag, attrs, start):
+        if start:
+            # avoid carrying over pending spaces before explicit breaks
+            self.space = False
+            if self.blockquote > 0:
+                self.o("  \n> ")
+            else:
+                self.o("  \n")
 
-        elif tag in ("del", "strike", "s"):
-            if start and self.preceding_data and self.preceding_data.endswith("~"):
-                strike = " ~~"
+    def _tag_hr(self, tag, attrs, start):
+        if start:
+            self.p()
+            self.o("* * *")
+            self.p()
+
+    def _tag_quiet(self, tag, attrs, start):
+        if tag == "body":
+            self.quiet = 0  # sites like 9rules.com never close <head>
+            return
+        step = 1 if start else -1
+        self.quiet += step
+        if tag == "style":
+            self.style += step
+
+    def _tag_blockquote(self, tag, attrs, start):
+        if start:
+            self.p()
+            self.o("> ", puredata=False, force=True)
+            self.start = True
+            self.blockquote += 1
+        else:
+            self.blockquote -= 1
+            self.p()
+
+    def _tag_em(self, tag, attrs, start):
+        if not self.cfg.ignore_emphasis:
+            # Separate with a space if we immediately follow an
+            # alphanumeric character, since otherwise Markdown won't
+            # render the emphasis marks ('foo_bar_' stays visible).
+            if (
+                start
+                and self.preceding_data
+                and not self.preceding_data[-1].isspace()
+                and not _is_punctuation(self.preceding_data[-1])
+            ):
+                emphasis = " " + self.cfg.emphasis_mark
                 self.preceding_data += " "
             else:
-                strike = "~~"
-            self.o(strike)
+                emphasis = self.cfg.emphasis_mark
+            self.o(emphasis)
             if start:
                 self.stressed = True
 
+    def _tag_strong(self, tag, attrs, start):
+        if not self.cfg.ignore_emphasis:
+            # Separate with space if we immediately follow an *
+            # character, else Markdown won't render the resulting ***.
+            if (
+                start
+                and self.preceding_data
+                # empty strong_mark: the lookup would IndexError
+                and self.cfg.strong_mark
+                and self.preceding_data[-1] == self.cfg.strong_mark[0]
+            ):
+                strong = " " + self.cfg.strong_mark
+                self.preceding_data += " "
+            else:
+                strong = self.cfg.strong_mark
+            self.o(strong)
+            if start:
+                self.stressed = True
+
+    def _tag_strike(self, tag, attrs, start):
+        if start and self.preceding_data and self.preceding_data.endswith("~"):
+            strike = " ~~"
+            self.preceding_data += " "
         else:
-            matched_early = False
+            strike = "~~"
+        self.o(strike)
+        if start:
+            self.stressed = True
 
-        if google_doc:
-            if not self.inheader:
-                # handle some font attributes, but leave headers clean
-                self.add_emphasis(start, self.tag_style, self.parent_style)
+    def _tag_code(self, tag, attrs, start):
+        if not self.pre:
+            self.o("`")  # TODO: `` `this` ``
+            self.code = not self.code
 
-        if matched_early:
-            pass
-
-        elif tag in ("kbd", "code", "tt"):
-            if not self.pre:
-                self.o("`")  # TODO: `` `this` ``
-                self.code = not self.code
-
-        elif tag == "abbr":
-            if start:
+    def _tag_abbr(self, tag, attrs, start):
+        if start:
+            self.abbr_title = None
+            self.abbr_data = ""
+            if attrs.get("title") is not None:
+                self.abbr_title = attrs["title"]
+        else:
+            if self.abbr_title is not None and self.abbr_data is not None:
+                self.abbr_list[self.abbr_data] = self.abbr_title
                 self.abbr_title = None
-                self.abbr_data = ""
-                if attrs.get("title") is not None:
-                    self.abbr_title = attrs["title"]
-            else:
-                if self.abbr_title is not None and self.abbr_data is not None:
-                    self.abbr_list[self.abbr_data] = self.abbr_title
-                    self.abbr_title = None
-                self.abbr_data = None
+            self.abbr_data = None
 
-        elif tag == "q":
-            if not self.quote:
-                self.o(self.cfg.open_quote)
-            else:
-                self.o(self.cfg.close_quote)
-            self.quote = not self.quote
+    def _tag_q(self, tag, attrs, start):
+        if not self.quote:
+            self.o(self.cfg.open_quote)
+        else:
+            self.o(self.cfg.close_quote)
+        self.quote = not self.quote
 
-        elif tag == "a" and not self.cfg.ignore_anchors:
-            if start:
-                href = attrs.get("href")
-                if (
-                    href is not None
-                    and not (self.cfg.skip_internal_links and href.startswith("#"))
-                    and not (
-                        self.cfg.ignore_mailto_links and href.startswith("mailto:")
-                    )
-                ):
-                    if self.cfg.protect_links:
-                        attrs = dict(attrs)
-                        attrs["href"] = "<" + href + ">"
-                    self.astack.append(attrs)
-                    self.maybe_automatic_link = attrs["href"]
-                    self.empty_link = True
-                else:
-                    self.astack.append(None)
-            else:
-                if self.astack:
-                    a = self.astack.pop()
-                    if self.maybe_automatic_link is not None and not self.empty_link:
-                        self.maybe_automatic_link = None
-                    else:
-                        if a is not None and self.empty_link:
-                            self.o("[")
-                            self.empty_link = False
-                            self.maybe_automatic_link = None
-                        if a is not None:
-                            self._finalize_anchor(a)
-
-        elif tag == "img" and start:
-            src = attrs.get("src")
-            if src:
-                self.media_refs.append(MediaRef(src, self.segment))
-            if not self.cfg.ignore_images and src:
-                if not self.cfg.images_to_alt:
+    def _tag_a(self, tag, attrs, start):
+        if self.cfg.ignore_anchors:
+            return
+        if start:
+            href = attrs.get("href")
+            if (
+                href is not None
+                and not (self.cfg.skip_internal_links and href.startswith("#"))
+                and not (
+                    self.cfg.ignore_mailto_links and href.startswith("mailto:")
+                )
+            ):
+                if self.cfg.protect_links:
                     attrs = dict(attrs)
-                    attrs["href"] = src
-                alt = attrs.get("alt")
-                if alt is None:
-                    alt = self.cfg.default_image_alt
-
-                # with images_with_size, write raw html including width,
-                # height, and alt attributes
-                if self.cfg.images_as_html or (
-                    self.cfg.images_with_size
-                    and ("width" in attrs or "height" in attrs)
-                ):
-                    self.o("<img src='" + src + "' ")
-                    if attrs.get("width"):
-                        self.o("width='" + str(attrs["width"]) + "' ")
-                    if attrs.get("height"):
-                        self.o("height='" + str(attrs["height"]) + "' ")
-                    if alt:
-                        self.o("alt='" + alt + "' ")
-                    self.o("/>")
-                    return
-
-                # if we have a link to create, output the start
-                if self.maybe_automatic_link is not None:
-                    href = self.maybe_automatic_link
-                    if (
-                        self.cfg.images_to_alt
-                        and utils.escape_md(alt) == href
-                        and constants.RE_ABSOLUTE_URL_MATCHER.match(href)
-                    ):
-                        self.o("<" + utils.escape_md(alt) + ">")
-                        self.empty_link = False
-                        return
-                    self.o("[")
+                    attrs["href"] = "<" + href + ">"
+                self.astack.append(attrs)
+                self.maybe_automatic_link = attrs["href"]
+                self.empty_link = True
+            else:
+                self.astack.append(None)
+        else:
+            if self.astack:
+                a = self.astack.pop()
+                if self.maybe_automatic_link is not None and not self.empty_link:
                     self.maybe_automatic_link = None
-                    self.empty_link = False
-
-                # with images_to_alt we discard the image itself and keep
-                # only the alt text
-                if self.cfg.images_to_alt:
-                    self.o(utils.escape_md(alt))
                 else:
-                    self.o("![" + utils.escape_md(alt) + "]")
-                    if self.cfg.inline_links:
-                        href = attrs.get("href") or ""
-                        self.o(
-                            "("
-                            + utils.escape_md(url_join(self.cfg.base_url, href))
-                            + ")"
-                        )
-                    else:
-                        a_props = self._footnote_props(attrs)
-                        self.o("[" + str(a_props.count) + "]")
+                    if a is not None and self.empty_link:
+                        self.o("[")
+                        self.empty_link = False
+                        self.maybe_automatic_link = None
+                    if a is not None:
+                        self._finalize_anchor(a)
 
-        elif tag == "dl":
+    def _tag_img(self, tag, attrs, start):
+        src = attrs.get("src")
+        if not start or not src:
+            return
+        self.media[-1].append(src)
+        if self.cfg.ignore_images:
+            return
+        if not self.cfg.images_to_alt:
+            attrs = dict(attrs)
+            attrs["href"] = src
+        alt = attrs.get("alt")
+        if alt is None:
+            alt = self.cfg.default_image_alt
+
+        # with images_with_size, write raw html including width,
+        # height, and alt attributes
+        if self.cfg.images_as_html or (
+            self.cfg.images_with_size
+            and ("width" in attrs or "height" in attrs)
+        ):
+            self.o("<img src='" + src + "' ")
+            if attrs.get("width"):
+                self.o("width='" + str(attrs["width"]) + "' ")
+            if attrs.get("height"):
+                self.o("height='" + str(attrs["height"]) + "' ")
+            if alt:
+                self.o("alt='" + alt + "' ")
+            self.o("/>")
+            return True
+
+        # if we have a link to create, output the start
+        if self.maybe_automatic_link is not None:
+            href = self.maybe_automatic_link
+            if (
+                self.cfg.images_to_alt
+                and utils.escape_md(alt) == href
+                and constants.RE_ABSOLUTE_URL_MATCHER.match(href)
+            ):
+                self.o("<" + utils.escape_md(alt) + ">")
+                self.empty_link = False
+                return True
+            self.o("[")
+            self.maybe_automatic_link = None
+            self.empty_link = False
+
+        # with images_to_alt we discard the image itself and keep
+        # only the alt text
+        if self.cfg.images_to_alt:
+            self.o(utils.escape_md(alt))
+        else:
+            self.o("![" + utils.escape_md(alt) + "]")
+            if self.cfg.inline_links:
+                href = attrs.get("href") or ""
+                self.o(
+                    "("
+                    + utils.escape_md(url_join(self.cfg.base_url, href))
+                    + ")"
+                )
+            else:
+                a_props = self._footnote_props(attrs)
+                self.o("[" + str(a_props.count) + "]")
+
+    def _tag_dl(self, tag, attrs, start):
+        if tag == "dl":
             if start:
                 self.p()
         elif tag == "dt":
             if not start:
                 self.pbr()
-        elif tag == "dd":
-            if start:
-                self.o("    ")
-            else:
-                self.pbr()
-
-        elif tag in ("ol", "ul"):
-            # Google Docs create sub lists as top level lists
-            if not self.lst and not self.last_was_list:
-                self.p()
-            if start:
-                if google_doc:
-                    list_style = utils.google_list_style(self.tag_style)
-                else:
-                    list_style = tag
-                numbering_start = utils.list_numbering_start(attrs)
-                self.lst.append(ListElement(list_style, numbering_start))
-            else:
-                if self.lst:
-                    self.lst.pop()
-                    if not google_doc and not self.lst:
-                        self.o("\n")
-            self.last_was_list = True
-            return  # reference's else-branch reset must not fire for ol/ul
-
-        elif tag == "li":
-            self.list_code_indent = ""
+        elif start:
+            self.o("    ")
+        else:
             self.pbr()
-            if start:
-                if self.lst:
-                    li = self.lst[-1]
-                else:
-                    li = ListElement("ul", 0)
-                if google_doc:
-                    self.o(
-                        "  "
-                        * utils.google_nest_count(
-                            self.tag_style, self.cfg.google_list_indent
-                        )
-                    )
-                else:
-                    # indent two spaces per enclosing list, except three for
-                    # lists nested under an ordered list (whose "N. " marker
-                    # is three chars wide)
-                    parent_list = None
-                    for list_element in self.lst:
-                        self.list_code_indent += (
-                            "   " if parent_list == "ol" else "  "
-                        )
-                        parent_list = list_element.name
-                    self.o(self.list_code_indent)
 
-                if li.name == "ul":
-                    self.list_code_indent += "  "
-                    self.o(self.cfg.ul_item_mark + " ")
-                elif li.name == "ol":
-                    li.num += 1
-                    self.list_code_indent += "   "
-                    self.o(str(li.num) + ". ")
-                self.start = True
-
-        elif tag in ("table", "tr", "td", "th"):
-            if self.cfg.ignore_tables:
-                if tag == "tr" and not start:
-                    self.soft_br()
-            elif self.cfg.bypass_tables:
-                if start:
-                    self.soft_br()
-                if tag in ("td", "th"):
-                    if start:
-                        self.o("<{}>\n\n".format(tag))
-                    else:
-                        self.o("\n</{}>".format(tag))
-                else:
-                    if start:
-                        self.o("<{}>".format(tag))
-                    else:
-                        self.o("</{}>".format(tag))
-            else:
-                if tag == "table":
-                    if start:
-                        self.table_start = True
-                        if self.cfg.pad_tables:
-                            self.o("<" + constants.TABLE_MARKER_FOR_PAD + ">")
-                            self.o("  \n")
-                    else:
-                        if self.cfg.pad_tables:
-                            # break in case the table is empty or a 1-row table
-                            self.soft_br()
-                            self.o("</" + constants.TABLE_MARKER_FOR_PAD + ">")
-                            self.o("  \n")
-                if tag in ("td", "th") and start:
-                    if self.split_next_td:
-                        self.o("| ")
-                    self.split_next_td = True
-                if tag == "tr" and start:
-                    self.td_count = 0
-                if tag == "tr" and not start:
-                    self.split_next_td = False
-                    self.soft_br()
-                if tag == "tr" and not start and self.table_start:
-                    # underline table header
-                    if self.td_count > 0:
-                        self.o("|".join(["---"] * self.td_count))
-                    self.soft_br()
-                    self.table_start = False
-                if tag in ("td", "th") and start:
-                    self.td_count += 1
-
-        elif tag == "pre":
-            if start:
-                self.startpre = True
-                self.pre = True
-                self.pre_indent = ""
-            else:
-                self.pre = False
-                if self.cfg.backquote_code_style:
-                    self.out("\n" + self.pre_indent + "```")
-                if self.cfg.mark_code:
-                    self.out("\n[/code]")
+    def _tag_list(self, tag, attrs, start):
+        # Google Docs create sub lists as top level lists
+        if not self.lst and not self.last_was_list:
             self.p()
+        if start:
+            if self.cfg.google_doc:
+                list_style = utils.google_list_style(self.tag_style)
+            else:
+                list_style = tag
+            numbering_start = utils.list_numbering_start(attrs)
+            self.lst.append(ListElement(list_style, numbering_start))
+        else:
+            if self.lst:
+                self.lst.pop()
+                if not self.cfg.google_doc and not self.lst:
+                    self.o("\n")
+        self.last_was_list = True
+        return True  # reference's else-branch reset must not fire for ol/ul
 
-        elif tag in ("sup", "sub") and self.cfg.include_sup_sub:
+    def _tag_li(self, tag, attrs, start):
+        self.list_code_indent = ""
+        self.pbr()
+        if start:
+            if self.lst:
+                li = self.lst[-1]
+            else:
+                li = ListElement("ul", 0)
+            if self.cfg.google_doc:
+                self.o(
+                    "  "
+                    * utils.google_nest_count(
+                        self.tag_style, self.cfg.google_list_indent
+                    )
+                )
+            else:
+                # indent two spaces per enclosing list, except three for
+                # lists nested under an ordered list (whose "N. " marker
+                # is three chars wide)
+                parent_list = None
+                for list_element in self.lst:
+                    self.list_code_indent += (
+                        "   " if parent_list == "ol" else "  "
+                    )
+                    parent_list = list_element.name
+                self.o(self.list_code_indent)
+
+            if li.name == "ul":
+                self.list_code_indent += "  "
+                self.o(self.cfg.ul_item_mark + " ")
+            elif li.name == "ol":
+                li.num += 1
+                self.list_code_indent += "   "
+                self.o(str(li.num) + ". ")
+            self.start = True
+
+    def _tag_table(self, tag, attrs, start):
+        if self.cfg.ignore_tables:
+            if tag == "tr" and not start:
+                self.soft_br()
+        elif self.cfg.bypass_tables:
+            if start:
+                self.soft_br()
+            if tag in ("td", "th"):
+                if start:
+                    self.o("<{}>\n\n".format(tag))
+                else:
+                    self.o("\n</{}>".format(tag))
+            else:
+                if start:
+                    self.o("<{}>".format(tag))
+                else:
+                    self.o("</{}>".format(tag))
+        else:
+            if tag == "table":
+                if start:
+                    self.table_start = True
+                    if self.cfg.pad_tables:
+                        self.o("<" + constants.TABLE_MARKER_FOR_PAD + ">")
+                        self.o("  \n")
+                else:
+                    if self.cfg.pad_tables:
+                        # break in case the table is empty or a 1-row table
+                        self.soft_br()
+                        self.o("</" + constants.TABLE_MARKER_FOR_PAD + ">")
+                        self.o("  \n")
+            if tag in ("td", "th") and start:
+                if self.split_next_td:
+                    self.o("| ")
+                self.split_next_td = True
+            if tag == "tr" and start:
+                self.td_count = 0
+            if tag == "tr" and not start:
+                self.split_next_td = False
+                self.soft_br()
+            if tag == "tr" and not start and self.table_start:
+                # underline table header
+                if self.td_count > 0:
+                    self.o("|".join(["---"] * self.td_count))
+                self.soft_br()
+                self.table_start = False
+            if tag in ("td", "th") and start:
+                self.td_count += 1
+
+    def _tag_pre(self, tag, attrs, start):
+        if start:
+            self.startpre = True
+            self.pre = True
+            self.pre_indent = ""
+        else:
+            self.pre = False
+            if self.cfg.backquote_code_style:
+                self.out("\n" + self.pre_indent + "```")
+            if self.cfg.mark_code:
+                self.out("\n[/code]")
+        self.p()
+
+    def _tag_sup_sub(self, tag, attrs, start):
+        if self.cfg.include_sup_sub:
             if start:
                 self.o("<{}>".format(tag))
             else:
                 self.o("</{}>".format(tag))
-
-        # the reference's ol/ul else-branch: every tag event that reaches
-        # this point (no early return, not ol/ul) resets the flag
-        self.last_was_list = False
 
     # ------------------------------------------------------------------
     # anchors (reference TagProcessor:572-716)
@@ -1120,31 +1106,19 @@ class _Parser(HTMLParser):
         self.o("][" + str(a_props.count) + "]")
 
     def _footnote_props(self, attrs: Dict[str, Optional[str]]) -> AnchorElement:
-        """Look up (or register) the footnote entry for these attrs."""
-        i = self._previous_index(attrs)
-        if i is not None:
-            return self.a[i]
-        self.acount += 1
-        a_props = AnchorElement(attrs, self.acount, self.outcount)
-        self.a.append(a_props)
+        """Look up (or register) the footnote entry for these attrs: an
+        entry with the same href and the same title, or the same lack of
+        one.  An anchor without an href never matches."""
+        href = attrs.get("href")
+        key = (href, "title" in attrs, attrs.get("title"))
+        a_props = self.a_index.get(key)
+        if a_props is None:
+            self.acount += 1
+            a_props = AnchorElement(attrs, self.acount, self.outcount)
+            self.a.append(a_props)
+            if href is not None:
+                self.a_index[key] = a_props
         return a_props
-
-    def _previous_index(self, attrs: Dict[str, Optional[str]]) -> Optional[int]:
-        """Index of a matching (href, title) pair in the footnote list."""
-        if attrs.get("href") is None:
-            return None
-        for i, a in enumerate(self.a):
-            if "href" in a.attrs and a.attrs["href"] == attrs["href"]:
-                if "title" in a.attrs or "title" in attrs:
-                    if (
-                        "title" in a.attrs
-                        and "title" in attrs
-                        and a.attrs["title"] == attrs["title"]
-                    ):
-                        return i
-                else:
-                    return i
-        return None
 
     # ------------------------------------------------------------------
     # document finalization (reference HTML2Markdown:59-73)
@@ -1154,6 +1128,36 @@ class _Parser(HTMLParser):
         """Emit the final chunks (pending break, reference footnotes)."""
         self.pbr()
         self.o("", force="end")
+
+
+#: tag -> (handler, whether it runs before googleDoc's add_emphasis); the
+#: phases are the reference's order.  Any other tag is a pass-through.
+_TAG_TABLE: Dict[str, Tuple[Callable, bool]] = {
+    tag: (handler, before)
+    for tags, handler, before in (
+        ("h1 h2 h3 h4 h5 h6 h7 h8 h9", _Parser._tag_heading, True),
+        ("p div", _Parser._tag_p, True),
+        ("br", _Parser._tag_br, True),
+        ("hr", _Parser._tag_hr, True),
+        ("head style script body", _Parser._tag_quiet, True),
+        ("blockquote", _Parser._tag_blockquote, True),
+        ("em i u", _Parser._tag_em, True),
+        ("strong b", _Parser._tag_strong, True),
+        ("del strike s", _Parser._tag_strike, True),
+        ("kbd code tt", _Parser._tag_code, False),
+        ("abbr", _Parser._tag_abbr, False),
+        ("q", _Parser._tag_q, False),
+        ("a", _Parser._tag_a, False),
+        ("img", _Parser._tag_img, False),
+        ("dl dt dd", _Parser._tag_dl, False),
+        ("ol ul", _Parser._tag_list, False),
+        ("li", _Parser._tag_li, False),
+        ("table tr td th", _Parser._tag_table, False),
+        ("pre", _Parser._tag_pre, False),
+        ("sup sub", _Parser._tag_sup_sub, False),
+    )
+    for tag in tags.split()
+}
 
 
 def _is_punctuation(ch: str) -> bool:
@@ -1222,15 +1226,18 @@ def _single_spaced(para: str) -> bool:
 def _wrap_para(para: str, width: int, indent: str) -> List[str]:
     """Wrap one paragraph: textwrap.wrap(para, width,
     break_long_words=False, subsequent_indent=indent), except that a
-    single-spaced paragraph always takes the greedy wrap.
+    single-spaced paragraph always takes the greedy wrap, and so does
+    every paragraph at a width below 1 (one word per line, split at runs
+    of spaces), where textwrap raises.
 
     The greedy wrap equals textwrap on a printable paragraph (so with no
     whitespace but " ") with no hyphen, at width >= 1.  On a single-spaced
-    paragraph it differs in two ways the output has always had: it keeps
-    a word of only Unicode whitespace at a line break, where textwrap
-    drops it, and it takes a width below 1, where textwrap raises.
+    paragraph it keeps a word of only Unicode whitespace at a line break,
+    where textwrap drops it, as the output always has.
     """
-    if width >= 1 and para.isprintable():
+    if width < 1:
+        return _fast_wrap(para, width, indent)
+    if para.isprintable():
         if len(para) <= width:
             # fits on one line: textwrap would only drop trailing spaces
             line = para.rstrip(" ")
@@ -1379,14 +1386,6 @@ def convert_spans(
 
     parser = _Parser(cfg)
     raw_boundaries: List[int] = []  # outtextlist index at each segment end
-    # media events in document order: ("img", ref, segment) from the tag
-    # dispatcher plus ("pass", ref, segment) recorded here at boundaries
-    ordered_media: List[Tuple[str, int]] = []
-
-    def _drain_img_refs() -> None:
-        ordered_media.extend((r.media_ref, r.segment) for r in parser.media_refs)
-        parser.media_refs.clear()
-
     # coalesce runs of consecutive html spans: a fragment boundary is only
     # meaningful where a media span sits between them (feeding fragments
     # separately would let tokenizer-buffer chunking interact with the
@@ -1440,13 +1439,11 @@ def convert_spans(
             # clean line boundary before the media asset
             parser.pbr()
             parser.o("", puredata=False, force=True)
-            _drain_img_refs()
             raw_boundaries.append(len(parser.outtextlist))
-            ordered_media.append((media, parser.segment))
-            parser.segment += 1
+            parser.media[-1].append(media)
+            parser.media.append([])
     parser.close()
     parser.flush()
-    _drain_img_refs()
 
     chunks = parser.outtextlist
     nbsp = "\u00a0" if cfg.unicode_snob else " "
@@ -1475,14 +1472,9 @@ def convert_spans(
             for i, s in enumerate(segment_texts)
         ]
 
-    media_by_segment: Dict[int, List[str]] = {}
-    for media, seg_idx in ordered_media:
-        media_by_segment.setdefault(seg_idx, []).append(media)
-
     out_spans: List[Tuple[str, str, str]] = []
-    for i, seg_text in enumerate(segment_texts):
+    for seg_text, media_refs in zip(segment_texts, parser.media):
         if seg_text:
             out_spans.append(("text", seg_text, ""))
-        for media in media_by_segment.get(i, []):
-            out_spans.append(("media_ref", "", media))
+        out_spans.extend(("media_ref", "", media) for media in media_refs)
     return out_spans

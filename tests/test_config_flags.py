@@ -104,3 +104,6 @@ def test_unicode_snob_nbsp_at_paragraph_end():
 
 def test_negative_body_width_puts_one_word_per_line():
     assert convert("<p>a b</p>", Config(body_width=-1)) == "a\nb\n\n"
+    # a hyphen sends the paragraph past the single-spaced test: it must
+    # wrap the same way, not reach textwrap, which raises below width 1
+    assert convert("<p>a-b c</p>", Config(body_width=-1)) == "a-b\nc\n\n"

@@ -10,6 +10,7 @@ import pytest
 import html2text_spark.core.converter as C
 from html2text_spark.core.config import Config
 from golden import ERROR_FIXTURES, iter_fixtures
+from htmlgen import random_html
 
 
 def _both_paths(html, cfg=None):
@@ -30,51 +31,60 @@ def test_fixture_corpus_differential():
         assert fast == slow, f"fast/slow divergence on fixture {name}"
 
 
-_TAGS = ["p", "div", "b", "i", "em", "span", "ul", "li", "ol", "pre", "code",
-         "blockquote", "h1", "h2", "table", "tr", "td", "a", "q", "abbr"]
-_WORDS = ["alpha", "beta", "gamma", "x<y", "a&b", "&amp;", "&#65;", "&bogus;",
-          "tail  space", "nb sp", "-dash-", "1. list", "* star",
-          "<!-->", "<!--->", "<![CDATA[z]]>", "<!doctype html>", "<?pi?>",
-          "</stray>", "<", "< notatag", "a=b",
-          "&Delta;", "&Aacute;", "&THORN;x", "<a href>v</a>",
-          "<abbr title>T</abbr>", "<td nowrap>c</td>",
-          # sentinel-literal injection: must round-trip, not decode
-          "__PH2T__", "__PH2T__ENT_amp__", "__PH2T__CHAR_65__",
-          "__PH2T__RAW_x__", "x__PH2T__y"]
-
-
-def _random_html(rng: random.Random, depth: int = 0) -> str:
-    parts = []
-    for _ in range(rng.randint(1, 6)):
-        roll = rng.random()
-        if roll < 0.4 or depth > 3:
-            parts.append(rng.choice(_WORDS))
-        elif roll < 0.5:
-            parts.append("<!-- %s -->" % rng.choice(_WORDS))
-        elif roll < 0.55:
-            parts.append("<br/>")
-        elif roll < 0.6:
-            src = "img%d.png" % rng.randint(0, 9)
-            parts.append('<img src="%s" alt="a%d">' % (src, rng.randint(0, 9)))
-        else:
-            tag = rng.choice(_TAGS)
-            attrs = ""
-            if tag == "a":
-                attrs = ' href="http://e.com/%d"' % rng.randint(0, 99)
-            elif rng.random() < 0.3:
-                attrs = " class=c%d style='color: red'" % rng.randint(0, 3)
-            inner = _random_html(rng, depth + 1)
-            closer = "</%s>" % tag if rng.random() < 0.9 else ""  # broken nesting
-            parts.append("<%s%s>%s%s" % (tag, attrs, inner, closer))
-    return " ".join(parts)
-
-
 @pytest.mark.parametrize("seed", range(150))
 def test_random_differential(seed):
     rng = random.Random(seed)
-    html = _random_html(rng)
+    html = random_html(rng)
     fast, slow = _both_paths(html)
     assert fast == slow, f"divergence seed={seed}\nhtml={html!r}"
+
+
+_DIFF_CONFIGS = {
+    "google_doc": Config(google_doc=True),
+    "reference_links": Config(inline_links=False),
+    "bypass_tables": Config(bypass_tables=True),
+    "pad_tables": Config(pad_tables=True),
+    "include_sup_sub": Config(include_sup_sub=True),
+    "images_with_size": Config(images_with_size=True),
+}
+
+
+@pytest.mark.parametrize("cfg_name", sorted(_DIFF_CONFIGS))
+@pytest.mark.parametrize("seed", range(150))
+def test_random_differential_configs(seed, cfg_name):
+    """The same documents under the options that change tag dispatch."""
+    html = random_html(random.Random(seed))
+    fast, slow = _both_paths(html, _DIFF_CONFIGS[cfg_name])
+    assert fast == slow, f"divergence seed={seed} {cfg_name}\nhtml={html!r}"
+
+
+@pytest.mark.parametrize(
+    "html, cfg, expected",
+    [
+        # kbd/code/tt run after googleDoc's emphasis: the bold mark opens
+        # before the backtick and closes after it
+        ('<p>a <code style="font-weight:bold">x</code> b</p>',
+         Config(google_doc=True), "a **`x** ` b\n\n"),
+        # em/i/u run before it: the emphasis mark comes first
+        ('<p>a <em style="font-weight:bold">x</em> b</p>',
+         Config(google_doc=True), "a _**x_**  b\n\n"),
+        # a heading inside a link: '#' goes before '[', and the end tag
+        # does not break up the link name
+        ('<a href="http://e.com"><h2>T</h2></a>', None,
+         "## [T](http://e.com)\n\n"),
+        # a heading's end tag returns early: no emphasis step to close a
+        # bold mark that was never opened
+        ('<h2 style="font-weight:bold">T</h2><p>x</p>',
+         Config(google_doc=True), "## T  \n  \nx\n\n"),
+        # so does ol/ul's: last_was_list survives, so the next list opens
+        # without a paragraph break
+        ("<ul><li>a</li></ul><ul><li>b</li></ul>",
+         Config(google_doc=True), "1. a\n1. b\n\n"),
+    ],
+)
+def test_dispatch_phase_and_early_return(html, cfg, expected):
+    for out in _both_paths(html, cfg):
+        assert out == expected
 
 
 def _both_span_paths(spans, cfg=None):
@@ -96,7 +106,7 @@ def test_random_differential_interleaved_spans(seed):
     spans = []
     offset = 0
     for _ in range(rng.randint(2, 5)):
-        spans.append(("html", _random_html(rng), ""))
+        spans.append(("html", random_html(rng), ""))
         if rng.random() < 0.7:
             spans.append(("media", "", f"asset://{rng.randint(0, 99)}"))
         offset += 1
@@ -295,9 +305,10 @@ def _check_original_wrap(para, width, indent):
     try:
         expected = _original_wrap_para(para, width, indent)
     except ValueError:  # textwrap rejects a width below 1
-        with pytest.raises(ValueError):
-            C._wrap_para(para, width, indent)
-        return
+        # every paragraph then takes one word per line, split at runs of
+        # spaces, like a single-spaced one
+        words = [w for w in para.split(" ") if w]
+        expected = words[:1] + [indent + w for w in words[1:]]
     assert C._wrap_para(para, width, indent) == expected, (para, width, indent)
 
 

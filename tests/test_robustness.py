@@ -4,9 +4,11 @@ wrap divergence from the PHP reference (content preservation wins)."""
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import html2text_spark.core.converter as C
 from html2text_spark.core.config import Config
 from html2text_spark.core.converter import convert, convert_spans
 
@@ -71,3 +73,52 @@ def test_stray_blockquote_close_adds_no_quote_prefix():
     assert convert(
         "<p>x</p></blockquote></blockquote><h2>t</h2><br>y"
     ) == "x\n\n## t\n\n  \ny\n\n"
+
+
+def _timed_convert(html, cfg=None):
+    t0 = time.perf_counter()
+    out = convert(html, cfg)
+    return out, time.perf_counter() - t0
+
+
+def test_unterminated_tag_with_many_attributes_is_linear():
+    # each quoted value also parses as an unquoted one; a tag regex that
+    # backtracks into the attributes tries 2**n parses before failing
+    html = "<p " + " ".join(f'a{i}="v"' for i in range(10_000))
+    fast, fast_s = _timed_convert(html)
+    C._FORCE_FALLBACK = True
+    try:
+        slow, slow_s = _timed_convert(html)
+    finally:
+        C._FORCE_FALLBACK = False
+    assert fast == slow
+    assert fast_s < 2.0 and slow_s < 2.0, (fast_s, slow_s)
+
+
+def test_many_reference_links_are_linear():
+    html = "".join(f'<a href="http://e.com/{i}">l{i}</a> ' for i in range(10_000))
+    out, seconds = _timed_convert(html, Config(inline_links=False))
+    assert seconds < 2.0, seconds
+    assert "[l9999][10000]" in out
+    assert out.endswith("   [10000]: http://e.com/9999\n\n")
+
+
+def test_reference_links_share_an_entry_per_href_and_title():
+    html = (
+        '<p><a href="http://u">x</a> <a href="http://u">y</a> '
+        '<a href="http://u" title="t">z</a> <a href="http://u" title="t">w</a> '
+        '<a>n</a> <a href="http://u" title>v</a></p>'
+        '<p><a href="http://u">again</a></p>'
+    )
+    assert convert(html, Config(inline_links=False)) == (
+        "[x][1] [y][1] [z][2] [w][2] n [v][3]\n\n[again][1]\n\n"
+        "   [1]: http://u\n\n   [2]: http://u (t)\n\n   [3]: http://u\n\n"
+    )
+    # a printed entry is dropped: the same href then takes a new number
+    assert convert(
+        html, Config(inline_links=False, links_each_paragraph=True)
+    ) == (
+        "[x][1] [y][1] [z][2] [w][2] n [v][3]\n\n"
+        "   [1]: http://u\n\n   [2]: http://u (t)\n\n   [3]: http://u\n\n"
+        "[again][4]\n\n   [4]: http://u\n\n"
+    )
