@@ -1,0 +1,3 @@
+from .zipguard import install as _install_zip_guard
+
+_install_zip_guard()

@@ -228,7 +228,7 @@ class _Parser(HTMLParser):
         self.lst: List[ListElement] = []
         self.list_code_indent = ""
         self.pre_indent = ""
-        self.abbr_data: Optional[str] = None
+        self.abbr_data: Optional[List[str]] = None
         self.abbr_list: Dict[str, str] = {}
         self.maybe_automatic_link: Optional[str] = None
         self.empty_link = False
@@ -435,7 +435,7 @@ class _Parser(HTMLParser):
     def o(self, data: str, puredata: bool = False, force=False) -> None:
         """Emit output, handling indentation, whitespace and footnotes."""
         if self.abbr_data is not None:
-            self.abbr_data += data
+            self.abbr_data.append(data)
 
         if self.quiet:
             return
@@ -841,12 +841,12 @@ class _Parser(HTMLParser):
     def _tag_abbr(self, tag, attrs, start):
         if start:
             self.abbr_title = None
-            self.abbr_data = ""
+            self.abbr_data = []
             if attrs.get("title") is not None:
                 self.abbr_title = attrs["title"]
         else:
             if self.abbr_title is not None and self.abbr_data is not None:
-                self.abbr_list[self.abbr_data] = self.abbr_title
+                self.abbr_list["".join(self.abbr_data)] = self.abbr_title
                 self.abbr_title = None
             self.abbr_data = None
 

@@ -16,8 +16,9 @@ html2text_spark.arrow).
 
 Design notes for the 10^12-document scale target:
   * documents are embarrassingly parallel; state never crosses rows;
-  * Arrow batches amortize the JVM->Python boundary; batch size should be
-    tuned by bytes not rows (see recommended_session_conf);
+  * Arrow batches amortize the JVM->Python boundary; documents are KB..MB,
+    so recommended_session_conf caps input batches by bytes (256 KiB) as
+    well as by rows (512); a larger document makes a batch of its own;
   * skew: a single 100 MB document in a partition of 4 KB documents
     stalls the stage tail -- salt_by_size() spreads documents uniformly
     by a full-range hash salt before the projection;
@@ -96,12 +97,14 @@ _METRICS_ARROW = to_arrow_type(METRICS_TYPE)
 def recommended_session_conf() -> dict:
     """Session settings for the extraction workload (large string rows)."""
     return {
-        # smaller Arrow batches: documents are KB..MB, not tuples
+        # Arrow input batches close at 512 documents or 256 KiB, whichever
+        # comes first: documents are KB..MB, not tuples, so the byte cap is
+        # what bounds a Python worker's batch memory on large documents
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+        "spark.sql.execution.arrow.maxBytesPerBatch": str(256 * 1024),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # a 100 TB corpus scan: default 128 MB splits are fine, but keep
-        # shuffle partitions proportional to cluster cores, not data size
+        # a 100 TB corpus scan: default 128 MB splits are fine
         "spark.sql.files.maxPartitionBytes": "134217728",
     }
 

@@ -6,6 +6,8 @@ import os
 import sys
 import time
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import html2text_spark.core.converter as C
@@ -122,3 +124,29 @@ def test_reference_links_share_an_entry_per_href_and_title():
         "   [1]: http://u\n\n   [2]: http://u (t)\n\n   [3]: http://u\n\n"
         "[again][4]\n\n   [4]: http://u\n\n"
     )
+
+
+def test_long_abbreviation_is_linear():
+    # every output call inside an <abbr> adds to the captured text; copying
+    # the text so far on each call made this quadratic (about 11 s here)
+    html = "<abbr title=t>" + "<b>xy</b> " * 120_000 + "</abbr>"
+    out, seconds = _timed_convert(html, Config(body_width=0))
+    assert seconds < 5.0, seconds
+    assert out.endswith("**xy** ]: t\n")
+    assert out.count("**xy**") == 2 * 120_000
+
+
+@pytest.mark.parametrize(
+    "open_tag, close_tag",
+    [("<ul><li>", "</li></ul>"), ("<ol><li>", "</li></ol>"),
+     ("<blockquote>", "</blockquote>")],
+)
+def test_deep_nesting_is_linear_in_output(open_tag, close_tag):
+    # a depth-d item carries a 2d-character indent, so the output itself is
+    # quadratic in the depth; the time per output byte must stay flat
+    html = (open_tag + "x") * 1000 + close_tag * 1000
+    out, seconds = _timed_convert(html)
+    out_bytes = len(out.encode("utf-8"))
+    assert out.count("x") == 1000
+    assert seconds < 2.0, seconds
+    assert seconds / out_bytes < 2e-6, (seconds, out_bytes)

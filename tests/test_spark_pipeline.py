@@ -657,3 +657,48 @@ def test_read_media_files_rejects_stem_collisions(spark, tmp_path):
     ).collect()
     assert len(rows) == 3
     assert len({r["media_ref"] for r in rows}) == 3
+
+
+def test_python_workers_keep_one_zip_directory_across_tasks(spark):
+    """Every task starts with importlib.invalidate_caches(); with the zip
+    guard a reused worker keeps one shared pyspark.zip directory instead
+    of re-reading a private copy per importer in every task."""
+
+    def probe(batches):
+        import os
+        import sys
+        import time
+        import zipimport
+
+        import pyarrow as pa
+
+        from html2text_spark.arrow import array_of
+
+        for _ in batches:
+            pass
+        ids = sorted({
+            id(f._files) for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+            and os.path.basename(f.archive) == "pyspark.zip"
+        })
+        yield pa.RecordBatch.from_arrays(
+            [array_of([os.getpid()], pa.int64()),
+             array_of([time.monotonic_ns()], pa.int64()),
+             array_of([" ".join(map(str, ids))], pa.string())],
+            names=["pid", "t", "ids"],
+        )
+
+    df = spark.range(0, 8, numPartitions=8)
+    rows = []
+    for _ in range(2):
+        rows += df.mapInArrow(probe, "pid long, t long, ids string").collect()
+    if not any(r["ids"] for r in rows):
+        pytest.skip("the Python workers do not import pyspark from pyspark.zip")
+    tasks = {}
+    for r in sorted(rows, key=lambda r: r["t"]):
+        tasks.setdefault(r["pid"], []).append(r["ids"])
+    reused = {pid: ids for pid, ids in tasks.items() if len(ids) > 1}
+    assert reused, tasks
+    for pid, ids in reused.items():
+        # one directory object, shared by all importers, in every later task
+        assert len(set(ids[1:])) == 1 and " " not in ids[1], (pid, ids)
