@@ -102,8 +102,10 @@ def extract_media_features(media: DataFrame, batch_target_bytes: int = 1 << 24) 
 
     mapInPandas so one Python worker call handles a whole Arrow batch of
     payloads; the real decode (decode_image) slots into the same loop.
-    Batch size is bounded by arrow.maxRecordsPerBatch -- tune down for
-    video-sized payloads.
+    A batch closes at arrow.maxRecordsPerBatch rows or, under
+    pipeline.recommended_session_conf, at arrow.maxBytesPerBatch
+    (256 KiB), whichever comes first: a payload that large makes a batch
+    of its own, so video-sized payloads do not pile up in one worker.
     """
 
     def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -99,7 +99,10 @@ def recommended_session_conf() -> dict:
     return {
         # Arrow input batches close at 512 documents or 256 KiB, whichever
         # comes first: documents are KB..MB, not tuples, so the byte cap is
-        # what bounds a Python worker's batch memory on large documents
+        # what bounds a Python worker's batch memory on large documents.
+        # Both caps are session-wide, so they shape every Arrow Python
+        # operator (mapInPandas, pandas UDFs, applyInPandasWithState); the
+        # byte cap binds only where rows average over 512 bytes
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
         "spark.sql.execution.arrow.maxBytesPerBatch": str(256 * 1024),
         "spark.sql.adaptive.enabled": "true",

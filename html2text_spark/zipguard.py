@@ -6,16 +6,22 @@ and 3.11 that makes every ``zipimport.zipimporter`` re-parse its archive's
 whole central directory at once: a worker holds one importer per package
 it imported from pyspark.zip (14-16 of them), each re-reading the zip's
 1,328 entries -- 0.14-0.19 s of CPU per task -- and each keeping a private
-copy of the result.  CPython 3.12 made this lazy (gh-103200).
+copy of the result.  CPython 3.12 made the re-read lazy (gh-103200): one
+read per archive after each invalidation, on its next import.
 
-``install()`` replaces ``zipimporter.invalidate_caches`` on 3.10 and 3.11:
-an importer re-reads its archive only when the archive's ``os.stat`` stamp
-(mtime_ns, size, inode) differs from the stamp taken before its directory
-was last read; otherwise it is pointed back at the shared
-``zipimport._zip_directory_cache`` entry.  So a changed archive is re-read
-once, by the first importer to see the change, and the others share that
-read.  The package ``__init__`` installs it, so every worker that runs a
-task of this package has it.
+``install()`` replaces ``zipimporter.invalidate_caches`` on 3.10 and 3.11
+and skips the re-read while the archive's ``os.stat`` stamp (mtime_ns,
+size, inode) is unchanged since its directory was last read: the importer
+is pointed back at the shared ``zipimport._zip_directory_cache`` entry.
+When the stamp changed, the first importer to see it re-reads the archive
+and the others share that read.  The package ``__init__`` installs it, so
+every worker that runs a task of this package has it.
+
+Limit: the stamp is all that is compared.  An archive rewritten in place
+to the same size within the file system's timestamp granularity keeps its
+old directory, and imports from it can then fail with a bad local file
+header or read the wrong bytes; 3.12 would re-read it.  Replace an archive
+by writing a new file and renaming it over the old one (a new inode).
 """
 
 from __future__ import annotations

@@ -2,6 +2,7 @@
 interleaved media preservation, metrics, skew salting, checkpoint/resume."""
 
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -659,6 +660,11 @@ def test_read_media_files_rejects_stem_collisions(spark, tmp_path):
     assert len({r["media_ref"] for r in rows}) == 3
 
 
+@pytest.mark.skipif(
+    sys.version_info[:2] not in ((3, 10), (3, 11)),
+    reason="the guard is installed on CPython 3.10-3.11 only; 3.12+ "
+    "re-reads zip directories lazily itself (gh-103200)",
+)
 def test_python_workers_keep_one_zip_directory_across_tasks(spark):
     """Every task starts with importlib.invalidate_caches(); with the zip
     guard a reused worker keeps one shared pyspark.zip directory instead
