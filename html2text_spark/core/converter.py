@@ -1347,8 +1347,9 @@ def _dispatch_events(parser: "_Parser", events: list) -> None:
 
 def convert(html_text: str, cfg: Optional[Config] = None) -> str:
     """Convert one HTML document to markdown-formatted plain text: the
-    'text' spans of ``convert_spans`` on the stripped document."""
-    spans = convert_spans([("html", html_text.strip(), "")], cfg)
+    'text' spans of ``convert_spans`` on the one-span document (which
+    trims the document's ends)."""
+    spans = convert_spans([("html", html_text, "")], cfg)
     return "".join(text for kind, text, _media in spans if kind == "text")
 
 
@@ -1362,7 +1363,10 @@ def convert_spans(
     (kind, text, media_ref) with kind in {'text', 'media_ref'} such that
 
       * for a pure-html document, concatenating the 'text' spans in order
-        reproduces ``convert()`` of the concatenated html (invariant 1);
+        reproduces ``convert()`` of the concatenated html (invariant 1):
+        the document's ends are trimmed here, once for every surface, by
+        left-stripping the first html span and right-stripping the last
+        (after coalescing, with ``str.strip``'s character set);
       * 'media_ref' spans appear once per input media span and once per
         <img> element, in document order (invariant 2).
 
@@ -1403,6 +1407,11 @@ def convert_spans(
         coalesced.append((kind, text, media))
     if run:
         coalesced.append(("html", "".join(run), ""))
+    # the early return above leaves at least one html span
+    html_at = [i for i, (kind, _t, _m) in enumerate(coalesced) if kind == "html"]
+    first, last = html_at[0], html_at[-1]
+    coalesced[first] = ("html", coalesced[first][1].lstrip(), "")
+    coalesced[last] = ("html", coalesced[last][1].rstrip(), "")
     spans = coalesced
     # one rule for every document: if EVERY html fragment fast-tokenizes
     # on its own, no fragment ends mid-token (the fast tokenizer rejects

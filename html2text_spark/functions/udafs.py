@@ -1,5 +1,6 @@
 """Grouped-aggregate pandas UDFs (the UDAF surface, completing the
-UDF / UDTF / UDAF triad beside udfs.py and udtfs.py).
+UDF / UDTF / UDAF triad beside html_to_md and html_spans in this
+package).
 
 Robust dispersion statistics -- median and median absolute deviation --
 are the classic justification for a custom aggregate: they are not

@@ -28,8 +28,9 @@ from pyspark.sql import functions as F
 def _hash_pct(col: Column, salt: str = "") -> Column:
     """Deterministic [0,100) value from md5 of the key (oracle-mirrorable:
     first 8 hex digits as a 32-bit integer, mod 100)."""
-    key = F.concat(col.cast("string"), F.lit(salt))
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long") % 100
+    from .dedup import md5_int32  # single copy of the md5-int contract
+
+    return md5_int32(F.concat(col.cast("string"), F.lit(salt))) % 100
 
 
 def hash_sample(

@@ -97,7 +97,7 @@ def _fake_features(payload: bytes) -> list:
     ]
 
 
-def extract_media_features(media: DataFrame, batch_target_bytes: int = 1 << 24) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     mapInPandas so one Python worker call handles a whole Arrow batch of

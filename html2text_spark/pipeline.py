@@ -113,19 +113,21 @@ def recommended_session_conf() -> dict:
 
 
 def _convert_row(spans: Sequence, cfg: Config):
-    """Pure per-row conversion: input span tuples -> (output spans,
-    bytes_in, malformed, ms).
+    """Pure per-row conversion, the one row function behind ``extract``
+    and the SQL surfaces in html2text_spark.functions: input span tuples
+    -> (output spans, bytes_in, error, ms).
 
     ``spans`` holds (kind, text, media_ref, offset) tuples, or None for a
     NULL span struct.  A malformed row (NULL span, conversion failure)
-    must never fail the job: it yields empty output with malformed set
-    (the reference raises LogicException for e.g. invalid base URLs -- we
-    record it instead).  Output spans are (kind, text, media_ref) tuples.
+    must never fail the job: it yields empty output and ``error``, the
+    exception's class name (None for a row that converts); the reference
+    raises LogicException for e.g. invalid base URLs -- we record it
+    instead.  Output spans are (kind, text, media_ref) tuples.
     """
     in_spans = []
     bytes_in = 0
     t0 = time.perf_counter()
-    malformed = False
+    error = None
     try:
         if len(spans) > 1:
             spans = sorted(spans, key=lambda s: s[3] or 0)
@@ -140,10 +142,10 @@ def _convert_row(spans: Sequence, cfg: Config):
                 bytes_in += len(text.encode("utf-8", "ignore")) + len(media)
             in_spans.append((kind or "", text, media))
         out = convert_spans(in_spans, cfg)
-    except Exception:
-        malformed = True
+    except Exception as exc:
+        error = type(exc).__name__
         out = []
-    return out, bytes_in, malformed, (time.perf_counter() - t0) * 1000.0
+    return out, bytes_in, error, (time.perf_counter() - t0) * 1000.0
 
 
 def _row_spans(spans: pa.Array) -> List[Sequence]:
@@ -188,10 +190,10 @@ def _convert_batch(
     positions: List[int] = []
     n_spans, bytes_in, malformed, ms, markdown = [], [], [], [], []
     for row in _row_spans(batch.column("spans")):
-        out, n_bytes, bad, row_ms = _convert_row(row, cfg)
+        out, n_bytes, error, row_ms = _convert_row(row, cfg)
         n_spans.append(len(out))
         bytes_in.append(n_bytes)
-        malformed.append(bad)
+        malformed.append(error is not None)
         ms.append(row_ms)
         if want_spans:
             flat.extend(out)

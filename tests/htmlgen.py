@@ -76,3 +76,22 @@ def random_html(rng: random.Random, depth: int = 0) -> str:
             closer = "</%s>" % tag if rng.random() < 0.9 else ""  # broken nesting
             parts.append("<%s%s>%s%s" % (tag, _attrs(rng, tag), inner, closer))
     return rng.choice([" ", "", "\n"]).join(parts)
+
+
+#: ASCII and Unicode whitespace, all of it removed by str.strip
+EDGE_WHITESPACE = [" ", "\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x85",
+                   "\xa0", "\u2003", "\u2028", "\u3000"]
+
+
+def pad_ends(rng: random.Random, html: str) -> str:
+    """html with 0-3 whitespace characters added at each end."""
+    pads = ["".join(rng.choices(EDGE_WHITESPACE, k=rng.randint(0, 3)))
+            for _ in range(2)]
+    return pads[0] + html + pads[1]
+
+
+def split_html(rng: random.Random, html: str, n: int = 3) -> list:
+    """html cut at n - 1 random points into n consecutive html spans
+    (kind, text, media_ref)."""
+    cuts = [0] + sorted(rng.randint(0, len(html)) for _ in range(n - 1))
+    return [("html", html[lo:hi], "") for lo, hi in zip(cuts, cuts[1:] + [len(html)])]

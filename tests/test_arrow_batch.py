@@ -181,7 +181,9 @@ def test_array_of_matches_pa_array(values, typ):
 
 def test_kernel_never_imports_pandas():
     """pyarrow.array() on a list imports pandas, ~0.3 s in every new Python
-    worker; the kernel builds its arrays from buffers instead."""
+    worker; the kernel builds its arrays from buffers instead.  The SQL
+    surfaces (html2text_spark.functions) run the same row function and
+    import no pandas either."""
     code = (
         "import sys, pyarrow as pa\n"
         "from html2text_spark.arrow import array_of\n"
@@ -196,6 +198,8 @@ def test_kernel_never_imports_pandas():
         "[array_of(['d'], pa.string()), spans], names=['doc_id', 'spans'])\n"
         "for output in ('full', 'metrics', 'markdown'):\n"
         "    _convert_batch(batch, Config(), output)\n"
+        "import html2text_spark.functions as fn\n"
+        "fn.html_to_md_udf(Config()); fn.make_html_spans_udtf(Config())\n"
         "print('pandas' in sys.modules)\n"
     )
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -10,7 +10,7 @@ import pytest
 import html2text_spark.core.converter as C
 from html2text_spark.core.config import Config
 from golden import ERROR_FIXTURES, iter_fixtures
-from htmlgen import random_html
+from htmlgen import pad_ends, random_html, split_html
 
 
 def _both_paths(html, cfg=None):
@@ -112,6 +112,32 @@ def test_random_differential_interleaved_spans(seed):
         offset += 1
     fast, slow = _both_span_paths(spans)
     assert fast == slow, f"divergence seed={seed}\nspans={spans!r}"
+
+
+_EDGE_CONFIGS = [
+    Config(),
+    Config(body_width=0, unicode_snob=True),
+    Config(google_doc=True),
+    Config(inline_links=False),
+    Config(pad_tables=True),
+    Config(single_line_break=True),
+]
+
+
+@pytest.mark.parametrize("seed", range(10))
+def test_convert_is_joined_text_spans_of_padded_documents(seed):
+    """convert_spans invariant 1 on documents whose ends carry ASCII or
+    Unicode whitespace, cut into three html spans: convert_spans trims
+    the document once, so convert (its one-span case) and the joined
+    'text' spans of the cut document agree."""
+    rng = random.Random(2000 + seed)
+    for _ in range(20):
+        html = pad_ends(rng, random_html(rng))
+        spans = split_html(rng, html)
+        for cfg in _EDGE_CONFIGS:
+            out = C.convert_spans(spans, cfg)
+            joined = "".join(t for k, t, _m in out if k == "text")
+            assert joined == C.convert(html, cfg), f"spans={spans!r}"
 
 
 try:

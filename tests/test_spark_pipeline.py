@@ -351,7 +351,7 @@ def test_html_to_md_udf(spark):
 def test_html_spans_udtf(spark):
     """SQL users can explode a document into converter span rows via the
     lateral UDTF surface."""
-    from html2text_spark.functions.udtfs import register_all
+    from html2text_spark.functions import register_all
 
     register_all(spark)
     rows = spark.sql(
@@ -381,20 +381,59 @@ def test_html_spans_udtf_error_sentinel(spark):
     """A document whose conversion RAISES must surface as one
     kind='error' sentinel row, never silently vanish from SQL results
     (invalid base URL is the one raising path, per the reference's
-    exception fixture)."""
+    exception fixture).  The same document gives "" from html_to_md, as
+    from extract(output="markdown"), and extract flags it malformed with
+    no spans."""
     from html2text_spark.core.config import Config
-    from html2text_spark.functions.udtfs import make_html_spans_udtf
+    from html2text_spark.functions import html_to_md_udf, make_html_spans_udtf
 
-    spark.udtf.register(
-        "html_spans_badbase",
-        make_html_spans_udtf(Config(base_url="http://[not-a-url")),
+    bad = Config(base_url="http://[not-a-url")
+    html = '<a href="rel/x">t</a>'
+    spark.udtf.register("html_spans_badbase", make_html_spans_udtf(bad))
+    rows = spark.sql("select * from html_spans_badbase('%s')" % html).collect()
+    assert [tuple(r) for r in rows] == [("error", "InvalidBaseUrl", "", -1)]
+    one = spark.createDataFrame([("bad", [("html", html, "", 0)])], INPUT_SCHEMA)
+    row = extract(one, bad).collect()[0]
+    assert row["spans"] == [] and row["metrics"]["malformed"] is True
+    assert one.select(html_to_md_udf(bad)(F.lit(html))).first()[0] == ""
+
+
+def test_surfaces_agree(spark):
+    """html_to_md, the joined 'text' rows of html_spans and
+    extract(output="markdown") all equal convert on documents with
+    whitespace-padded ends cut into html spans (a failing document:
+    test_html_spans_udtf_error_sentinel)."""
+    import random
+
+    from htmlgen import pad_ends, random_html, split_html
+
+    from html2text_spark.functions import register_all
+
+    rng = random.Random(12)
+    docs = {str(i): pad_ends(rng, random_html(rng)) for i in range(10)}
+    flat = spark.createDataFrame(list(docs.items()), "doc_id string, html string")
+    spans = spark.createDataFrame(
+        [
+            (i, [(k, t, m, j) for j, (k, t, m) in enumerate(split_html(rng, h))])
+            for i, h in docs.items()
+        ],
+        INPUT_SCHEMA,
     )
-    rows = spark.sql(
-        "select * from html_spans_badbase('<a href=\"rel/x\">t</a>')"
-    ).collect()
-    assert len(rows) == 1
-    assert rows[0]["kind"] == "error" and rows[0]["offset"] == -1
-    assert rows[0]["text"] == "InvalidBaseUrl"
+    register_all(spark)
+    flat.createOrReplaceTempView("agree_docs")
+    expected = {i: convert(h) for i, h in docs.items()}
+    assert dict(
+        spark.sql("select doc_id, html_to_md(html) from agree_docs").collect()
+    ) == expected
+    joined = dict.fromkeys(docs, "")
+    for r in spark.sql(
+        "select d.doc_id, s.kind, s.text from agree_docs d, "
+        "lateral html_spans(d.html) s order by d.doc_id, s.offset"
+    ).collect():
+        if r["kind"] == "text":
+            joined[r["doc_id"]] += r["text"]
+    assert joined == expected
+    assert dict(extract(spans, output="markdown").collect()) == expected
 
 
 def test_salt_by_size_plan_is_single_exchange(spark):

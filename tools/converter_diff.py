@@ -11,7 +11,9 @@ subprocess, so neither imports the other's package.  Inputs:
   * random rich documents from ``tests/htmlgen.py`` over every tag of the
     working tree's ``_TAG_TABLE``, with googleDoc styles, entities,
     ``&nbsp;``, U+2003 and U+3000;
-  * tag soups with mixed quoting, ``/>`` and unterminated tags.
+  * tag soups with mixed quoting, ``/>`` and unterminated tags;
+  * every ``PAD_EVERY``-th rich document and soup with 0-3 ASCII or
+    Unicode whitespace characters added at each end (named ``.../padded``).
 
 Every document is converted with ``convert`` and ``convert_spans``, and
 once more split at random points around media spans, each on the fast
@@ -43,6 +45,7 @@ WORKLOAD_DOCS = (("extract_skewed", 100), ("extract_tiny", 50))
 #: random rich documents and tag soups
 RICH_DOCS = 500
 SOUP_DOCS = 500
+PAD_EVERY = 3
 
 
 def _tag_callback(converter, tag, attrs, start):
@@ -108,7 +111,7 @@ def _split(rng: random.Random, html: str, tag: str) -> list:
 def build_inputs() -> list:
     """[(name, spans)]: every document as given and split around media."""
     sys.path[:0] = [ROOT, os.path.join(ROOT, "tests")]
-    from htmlgen import random_html
+    from htmlgen import pad_ends, random_html
     from perfbench import corpus
 
     docs = []
@@ -117,10 +120,13 @@ def build_inputs() -> list:
             for d in corpus.build(workload, seed, n, 1).sample:
                 docs.append(("%s/%d/%s" % (workload, seed, d.doc_id), d.spans))
     rng = random.Random("converter_diff")
-    for i in range(RICH_DOCS):
-        docs.append(("rich/%d" % i, [("html", random_html(rng), "")]))
-    for i in range(SOUP_DOCS):
-        docs.append(("soup/%d" % i, [("html", _soup(rng), "")]))
+    pad_rng = random.Random("converter_diff/pad")  # rng draws the same documents
+    for kind, n, make in (("rich", RICH_DOCS, random_html), ("soup", SOUP_DOCS, _soup)):
+        for i in range(n):
+            name, html = "%s/%d" % (kind, i), make(rng)
+            if i % PAD_EVERY == 0:
+                name, html = name + "/padded", pad_ends(pad_rng, html)
+            docs.append((name, [("html", html, "")]))
     inputs = []
     for name, spans in docs:
         inputs.append((name, spans))
@@ -235,7 +241,9 @@ def main(argv=None) -> int:
             raised[(case[1], side, error)] += 1
     print("converter_diff %s vs working tree: %d inputs, %d variants, %d cases, %.0f s"
           % (args.rev, len(inputs), len(VARIANTS), len(rev), time.time() - t0))
-    print("both returned, outputs differ: %d" % len(differ))
+    print("both returned, outputs differ: %d (%s)" % (len(differ), ", ".join(
+        "%s %d" % (fn, sum(c[2] == fn for c in differ))
+        for fn in ("convert", "convert_spans"))))
     for case in differ[:20]:
         print("  %s | %s | %s | %s" % case)
     print("one side raised (or both, differently): %d" % sum(raised.values()))
