@@ -203,52 +203,48 @@ def q_extract_markdown_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     w1 = F.split_part(F.col("text"), F.lit(" "), F.lit(1))
     w2 = F.split_part(F.col("text"), F.lit(" "), F.lit(2))
-    html_docs = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.concat(
-                    F.lit("<h1>"),
-                    F.substring("text", 1, 48),
-                    F.lit("</h1><p>"),
-                    F.substring("text", 1, 200),
-                    F.lit("</p><ul><li>"),
-                    w1,
-                    F.lit("</li><li>"),
-                    w2,
-                    F.lit('</li></ul><p><a href="http://example.com/'),
-                    F.col("doc_id").cast("string"),
-                    F.lit('">'),
-                    w1,
-                    F.lit("</a> <em>"),
-                    w2,
-                    F.lit("</em> <strong>"),
-                    w1,
-                    F.lit("</strong></p><blockquote>"),
-                    w2,
-                    F.lit("</blockquote><table><tr><th>"),
-                    w1,
-                    F.lit("</th><th>"),
-                    w2,
-                    F.lit("</th></tr><tr><td>"),
-                    w2,
-                    F.lit("</td><td>"),
-                    w1,
-                    F.lit("</td></tr></table><pre>"),
-                    w1,
-                    F.lit(" "),
-                    w2,
-                    F.lit('</pre><p><img src="http://img/'),
-                    F.col("doc_id").cast("string"),
-                    F.lit('.png" alt="'),
-                    w1,
-                    F.lit('"/></p>'),
-                ).alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
+    html_docs = adapt_flat_documents(
+        docs.select(
+            "doc_id",
+            F.concat(
+                F.lit("<h1>"),
+                F.substring("text", 1, 48),
+                F.lit("</h1><p>"),
+                F.substring("text", 1, 200),
+                F.lit("</p><ul><li>"),
+                w1,
+                F.lit("</li><li>"),
+                w2,
+                F.lit('</li></ul><p><a href="http://example.com/'),
+                F.col("doc_id").cast("string"),
+                F.lit('">'),
+                w1,
+                F.lit("</a> <em>"),
+                w2,
+                F.lit("</em> <strong>"),
+                w1,
+                F.lit("</strong></p><blockquote>"),
+                w2,
+                F.lit("</blockquote><table><tr><th>"),
+                w1,
+                F.lit("</th><th>"),
+                w2,
+                F.lit("</th></tr><tr><td>"),
+                w2,
+                F.lit("</td><td>"),
+                w1,
+                F.lit("</td></tr></table><pre>"),
+                w1,
+                F.lit(" "),
+                w2,
+                F.lit('</pre><p><img src="http://img/'),
+                F.col("doc_id").cast("string"),
+                F.lit('.png" alt="'),
+                w1,
+                F.lit('"/></p>'),
+            ).alias("html"),
+        ),
+        "html",
     )
     ext = extract(html_docs, cfg=Config(body_width=0))
     md = markdown_col()
@@ -281,25 +277,21 @@ def q_extract_markdown_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     w1 = F.split_part(F.col("text"), F.lit(" "), F.lit(1))
     w2 = F.split_part(F.col("text"), F.lit(" "), F.lit(2))
     sid = F.col("doc_id").cast("string")
-    html_docs = docs.select(
-        sid.alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.concat(
-                    F.lit("<h2>"), w1, F.lit(" "), w2,
-                    F.lit("</h2><p>"), w1,
-                    F.lit(' <a href="http://example.com/'), sid,
-                    F.lit('">'), w2,
-                    F.lit('</a></p><p><abbr title="'), w2, F.lit(" "), w1,
-                    F.lit('">'), w1,
-                    F.lit("</abbr></p><pre>"), w2, F.lit(" "), w1,
-                    F.lit("</pre>"),
-                ).alias("text"),
-                F.lit("").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
+    html_docs = adapt_flat_documents(
+        docs.select(
+            "doc_id",
+            F.concat(
+                F.lit("<h2>"), w1, F.lit(" "), w2,
+                F.lit("</h2><p>"), w1,
+                F.lit(' <a href="http://example.com/'), sid,
+                F.lit('">'), w2,
+                F.lit('</a></p><p><abbr title="'), w2, F.lit(" "), w1,
+                F.lit('">'), w1,
+                F.lit("</abbr></p><pre>"), w2, F.lit(" "), w1,
+                F.lit("</pre>"),
+            ).alias("html"),
+        ),
+        "html",
     )
     ext = extract(
         html_docs,
@@ -1329,7 +1321,7 @@ def q_text_cms_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     words = _docs(spark, sf_dir).select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("item")
+        F.explode(D.split_words("text")).alias("item")
     )
     sketch = count_min_build(words, "item", depth=CMS_DEPTH, width=CMS_WIDTH)
     probes = spark.createDataFrame([(w,) for w in CMS_PROBES], "item string")
@@ -1359,7 +1351,7 @@ def q_text_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name=_stream_query_name("cms", sf_dir),
     )
     words = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("item")
+        F.explode(D.split_words("text")).alias("item")
     )
     return _cms_probe_report(words, est)
 

@@ -100,7 +100,9 @@ def top_ngrams(
     """Top-k whitespace word n-grams per group by frequency (vocabulary /
     contamination statistics).  Ties broken by gram ascending so the
     result is deterministic and oracle-exact."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    from .dedup import split_words
+
+    words = split_words(text_col)
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(words, i, n)),

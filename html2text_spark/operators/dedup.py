@@ -96,13 +96,14 @@ def exact_dedup(df: DataFrame, text_col: str = "text", keep: tuple = ()) -> Data
     )
 
 
-def _words(text_col: str) -> Column:
-    return F.split(F.trim(F.col(text_col)), r"\s+")
+def split_words(text: str | Column) -> Column:
+    """Whitespace words of a text column (name or Column), trimmed first."""
+    return F.split(F.trim(text), r"\s+")
 
 
 def shingles(text_col: str = "text", k: int = 3) -> Column:
     """Word k-shingles as an array column (built-ins only)."""
-    w = _words(text_col)
+    w = split_words(text_col)
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(w) - F.lit(k - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(w, i, k)),

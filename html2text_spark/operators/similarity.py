@@ -1,22 +1,35 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embedding table ``(vec_id, embedding)``.
 
-  * cosine_topk     exact brute force: broadcast the (small) query side
-                    against the corpus, window top-k.  The baseline and
-                    the verification oracle.  All arithmetic in double
-                    with a left-fold sum so the DuckDB oracle reproduces
-                    results bit-for-bit.
-  * lsh_topk        random-hyperplane LSH: bucket the corpus by sign
-                    signature, probe only matching buckets.  The scale
-                    path: corpus side shuffles once on bucket key; query
-                    side is broadcast.  Approximate -- tests measure
-                    recall against cosine_topk.
+Five searches, one plan: ``_vectors`` projects the corpus to
+``(vec_id, e, nrm)`` and ``_rerank_topk`` broadcasts the query rows,
+joins them to the corpus (probe keys optional), re-ranks with exact
+cosine and keeps the top k per query.  All arithmetic is in double with
+a left-fold sum (or int64 for int8 vectors), so the DuckDB oracle
+reproduces results bit-for-bit.
+
+  * cosine_topk            exact brute force: every query against the
+                           whole corpus.  The baseline and the
+                           verification oracle.
+  * lsh_topk               random-hyperplane LSH: bucket the corpus by
+                           sign signature, probe the query's bucket and
+                           its 1-bit neighbours.  Approximate -- tests
+                           measure recall against cosine_topk.
+  * ivf_topk               IVF over trained k-means cells: probe the
+                           query's n_probe nearest cells.
+  * ivf_det_topk           the same IVF over md5-derived cells, the
+                           oracle-exact twin of ivf_topk.
+  * quantized_cosine_topk  exact search over int8-quantized vectors,
+                           integer dot products.
+
+``embedding_near_dups`` (bucketed self-join) and ``quantized_centroids``
+(integer per-group centroid) share the projection and the quantizer.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from typing import List, Sequence
+from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -28,52 +41,95 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
+def _idot(a: Column, b: Column) -> Column:
+    """Integer dot product: |q| <= 127, so sum q_a*q_b <= 127^2 * dims
+    is int64-safe and exact at any parallelism."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_ids: Sequence[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query id (self excluded).
+def _quantize(vec: Column) -> Column:
+    """Symmetric int8 quantization of an array<double>:
+    q_i = round(x_i / (amax/127))."""
+    amax = F.aggregate(
+        F.transform(vec, lambda x: F.abs(x)),
+        F.lit(0.0),
+        lambda acc, x: F.greatest(acc, x),
+    )
+    scale = F.greatest(amax, F.lit(1e-12)) / F.lit(127.0)
+    return F.transform(vec, lambda x: F.round(x / scale).cast("long"))
 
-    Plan: corpus scan -> broadcast-join the tiny query side -> projection
-    (codegen'd fold for dot/norm) -> window top-k partitioned by query.
-    The only shuffle is the window's hash partition on qid (|queries|
-    keys) over |queries| x |corpus| similarity rows; at 10^12-doc scale
-    swap the window for a per-partition heap aggregation, same API.
+
+def _vectors(emb: DataFrame, dot: Callable = _dot) -> DataFrame:
+    """The corpus as ``(vec_id, e, nrm)``: ``e`` is the embedding as
+    array<double>, or its int8 quantization when ``dot`` is ``_idot``.
+
+    The norm is computed ONCE per row: inside a (query, corpus) or
+    candidate-pair join it would be re-evaluated per pair (two extra
+    array folds per pair).  sqrt-then-multiply is the identical IEEE
+    operation order, so sims hash bit-equal.
     """
-    # norms precomputed ONCE per row (the r5 shape re-evaluated both
-    # array folds inside every (query, corpus) pair -- guide §2.3's
-    # "don't recompute in the hot pair loop"); sqrt-then-multiply is the
-    # identical IEEE operation order, so sims hash bit-equal
-    corpus = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("e"),
-    ).withColumn("nrm", _norm(F.col("e")))
-    queries = corpus.filter(F.col("vec_id").isin(list(query_ids))).select(
+    e = F.col("embedding").cast("array<double>")
+    if dot is _idot:
+        e = _quantize(e)
+    return emb.select("vec_id", e.alias("e")).withColumn(
+        "nrm", F.sqrt(dot(F.col("e"), F.col("e")))
+    )
+
+
+def _rerank_topk(
+    corpus: DataFrame,
+    query_ids: Sequence[int],
+    k: int,
+    key: Optional[str] = None,
+    probes: Optional[Column] = None,
+    dot: Callable = _dot,
+) -> DataFrame:
+    """Top-k exact-cosine neighbours of each query id (self excluded).
+
+    The query rows of ``corpus`` are broadcast as ``(qid, qe, qnrm)``;
+    with a ``key``, each is exploded to one row per element of
+    ``probes`` (evaluated on the query row) and joined to the corpus
+    rows whose ``key`` equals the probe, so the candidate lookup stays a
+    broadcast equi-join.  Without a key every corpus row is a candidate.
+    Candidates are ranked by ``round(dot(qe, e) / (qnrm * nrm), 8)``.
+
+    The only shuffle is the window's hash partition on qid (|queries|
+    keys); WindowGroupLimit cuts each partition to k rows per query
+    before it.  At 10^12-doc scale swap the window for a per-partition
+    heap aggregation here, for every search at once.
+    """
+    qcols = [
         F.col("vec_id").alias("qid"),
         F.col("e").alias("qe"),
         F.col("nrm").alias("qnrm"),
-    )
-    joined = F.broadcast(queries).crossJoin(corpus).filter(
-        F.col("vec_id") != F.col("qid")
-    )
+    ]
+    on = F.col("vec_id") != F.col("qid")
+    if key is not None:
+        qcols.append(F.explode(probes).alias("probe"))
+        on = (F.col(key) == F.col("probe")) & on
+    queries = corpus.filter(F.col("vec_id").isin(list(query_ids))).select(*qcols)
     sim = F.round(
-        _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 8
+        dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 8
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
-        joined.select("qid", "vec_id", sim.alias("sim"))
+        F.broadcast(queries)
+        .join(corpus, on)
+        .select("qid", "vec_id", sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def cosine_topk(emb: DataFrame, query_ids: Sequence[int], k: int = 5) -> DataFrame:
+    """Exact top-k cosine neighbors for each query id (self excluded):
+    corpus scan -> broadcast nested-loop join of the tiny query side ->
+    codegen'd dot fold -> window top-k."""
+    return _rerank_topk(_vectors(emb), query_ids, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> List[List[float]]:
@@ -110,8 +166,6 @@ def embedding_near_dups(
     threshold: float = 0.9,
     n_planes: int = 6,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 7,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (doc_a < doc_b, sim >= t).
@@ -124,17 +178,7 @@ def embedding_near_dups(
     touches ~1/2^n_planes of all pairs.
     """
     planes = _hyperplanes(dim, n_planes, seed)
-    # norm precomputed per row: inside the bucket self-join it would be
-    # re-evaluated once per candidate PAIR (two extra 64-element folds
-    # per pair); sqrt-then-multiply keeps the identical IEEE op order
-    hashed = (
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("e"),
-        )
-        .withColumn("bucket", lsh_bucket(F.col("e"), planes))
-        .withColumn("nrm", _norm(F.col("e")))
-    )
+    hashed = _vectors(emb).withColumn("bucket", lsh_bucket(F.col("e"), planes))
     l, r = hashed.alias("l"), hashed.alias("r")
     sim = F.round(
         _dot(F.col("l.e"), F.col("r.e")) / (F.col("l.nrm") * F.col("r.nrm")),
@@ -192,29 +236,11 @@ def _ivf_core(
             F.transform(F.array_sort(dists), lambda s: s["cell"]), 1, n
         )
 
-    # norm precomputed per row (re-evaluated per candidate pair in the
-    # r5 shape); identical IEEE op order, sims hash bit-equal
     indexed = corpus.withColumn(
         "cell", F.element_at(_nearest_cells(F.col("e"), 1), 1)
-    ).withColumn("nrm", _norm(F.col("e")))
-    queries = indexed.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("qid"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.explode(_nearest_cells(F.col("e"), n_probe)).alias("probe_cell"),
     )
-    joined = F.broadcast(queries).join(
-        indexed,
-        (F.col("cell") == F.col("probe_cell")) & (F.col("vec_id") != F.col("qid")),
-    )
-    sim = F.round(
-        _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 8
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        joined.select("qid", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rerank_topk(
+        indexed, query_ids, k, "cell", _nearest_cells(F.col("e"), n_probe)
     )
 
 
@@ -224,8 +250,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 7,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index, trained cells.
@@ -241,11 +265,8 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corpus = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("e"),
-    )
-    featurized = corpus.withColumn("features", array_to_vector("e"))
+    corpus = _vectors(emb)
+    featurized = corpus.select(array_to_vector("e").alias("features"))
     model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(featurized)
     centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     return _ivf_core(corpus, query_ids, k, n_probe, centroids)
@@ -272,18 +293,12 @@ def ivf_det_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 11,
 ) -> DataFrame:
     """IVF top-k with deterministic md5-derived centroids: exact-oracle
     variant of ``ivf_topk`` (same probe/re-rank plan, fixed cells)."""
-    corpus = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("e"),
-    )
     centroids = det_centroids(dim, n_cells, seed=seed)
-    return _ivf_core(corpus, query_ids, k, n_probe, centroids)
+    return _ivf_core(_vectors(emb), query_ids, k, n_probe, centroids)
 
 
 def lsh_topk(
@@ -292,133 +307,44 @@ def lsh_topk(
     k: int = 5,
     n_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 7,
-    probe_bits: int = 1,
 ) -> DataFrame:
     """Approximate top-k: multi-probe sign-signature LSH.
 
     2^n_planes buckets; corpus hashed once (projection).  The tiny query
-    side is *expanded* to all buckets within hamming distance
-    ``probe_bits`` of its own signature (1 + n_planes probes for
-    probe_bits=1), so the candidate lookup stays a broadcast equi-join on
-    the bucket key -- no cross join, no skew -- while recall rises with
-    the probe count.  Exact cosine re-ranks inside the candidate set.
+    side is *expanded* to its own bucket and the n_planes buckets at
+    hamming distance 1, so the candidate lookup stays a broadcast
+    equi-join on the bucket key -- no cross join, no skew -- while
+    recall rises with the probe count.  Exact cosine re-ranks inside the
+    candidate set.
     """
     planes = _hyperplanes(dim, n_planes, seed)
-    # per-row norm precomputed (not re-evaluated per candidate pair);
-    # identical IEEE op order, sims hash bit-equal
-    corpus = (
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("e"),
-        )
-        .withColumn("bucket", lsh_bucket(F.col("e"), planes))
-        .withColumn("nrm", _norm(F.col("e")))
+    corpus = _vectors(emb).withColumn("bucket", lsh_bucket(F.col("e"), planes))
+    bucket = F.col("bucket")
+    probes = F.array(
+        bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
     )
-    queries = corpus.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("qid"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    probes = [F.col("qbucket")]
-    if probe_bits >= 1:
-        probes += [
-            F.col("qbucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
-        ]
-    if probe_bits >= 2:
-        probes += [
-            F.col("qbucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
-    queries = queries.withColumn(
-        "probe", F.explode(F.array(*probes))
-    )
-    joined = F.broadcast(queries).join(
-        corpus,
-        (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("qid")),
-    )
-    sim = F.round(
-        _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 8
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        joined.select("qid", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(corpus, query_ids, k, "bucket", probes)
 
 
 def quantized_cosine_topk(
-    emb: DataFrame,
-    query_ids: Sequence[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, query_ids: Sequence[int], k: int = 5
 ) -> DataFrame:
     """Top-k cosine neighbors over INT8-quantized vectors.
 
-    Symmetric scalar quantization (q_i = round(x_i / (amax/127))) cuts
-    the vector footprint 4-8x -- the standard memory lever for
-    billion-vector ANN.  Key identity: the per-vector scales cancel in
-    the cosine, so similarity is computed ENTIRELY in integer dot
-    products (sum q_a*q_b <= 127^2 * dims, int64-safe) -- deterministic
-    at any parallelism and bit-reproducible in the SQL oracle, unlike
-    any float-accumulation scheme.  Same broadcast-query/window-top-k
-    plan as cosine_topk; recall vs the exact float cosine is asserted in
-    tests (int8 typically preserves the top-k set on normalized-ish
-    embeddings).
+    Symmetric scalar quantization cuts the vector footprint 4-8x -- the
+    standard memory lever for billion-vector ANN.  Key identity: the
+    per-vector scales cancel in the cosine, so similarity is computed
+    ENTIRELY in integer dot products -- deterministic at any parallelism
+    and bit-reproducible in the SQL oracle, unlike any float-accumulation
+    scheme.  Same plan as cosine_topk; recall vs the exact float cosine
+    is asserted in tests (int8 typically preserves the top-k set on
+    normalized-ish embeddings).
     """
-    amax = F.aggregate(
-        F.transform(F.col(vec_col).cast("array<double>"), lambda x: F.abs(x)),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, x),
-    )
-    scale = F.greatest(amax, F.lit(1e-12)) / F.lit(127.0)
-    quant = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x / scale).cast("long"),
-    )
-    idot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # norms precomputed ONCE per row: inside the join they would be
-    # re-evaluated per (query, corpus) pair -- 3 array folds per pair
-    # where 1 suffices
-    corpus = emb.select(
-        F.col(id_col).alias("vec_id"), quant.alias("q")
-    ).withColumn("nrm", F.sqrt(idot(F.col("q"), F.col("q")).cast("double")))
-    queries = corpus.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("qid"),
-        F.col("q").alias("qq"),
-        F.col("nrm").alias("qnrm"),
-    )
-    joined = F.broadcast(queries).crossJoin(corpus).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    sim = F.round(
-        idot(F.col("qq"), F.col("q")).cast("double")
-        / (F.col("qnrm") * F.col("nrm")),
-        8,
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        joined.select("qid", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(_vectors(emb, _idot), query_ids, k, dot=_idot)
 
 
-def quantized_centroids(
-    emb: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantized_centroids(emb: DataFrame, group_col: str = "label") -> DataFrame:
     """Per-group embedding centroid computed ENTIRELY in integer space.
 
     Float vector averaging is shuffle-order-dependent (double addition
@@ -437,16 +363,7 @@ def quantized_centroids(
     aggregate, map-side combined.  int64 safety: |q| <= 127, so a group
     would need > 7e16 vectors to overflow.
     """
-    amax = F.aggregate(
-        F.transform(F.col(vec_col).cast("array<double>"), lambda x: F.abs(x)),
-        F.lit(0.0),
-        lambda acc, x: F.greatest(acc, x),
-    )
-    scale = F.greatest(amax, F.lit(1e-12)) / F.lit(127.0)
-    quant = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x / scale).cast("long"),
-    )
+    quant = _quantize(F.col("embedding").cast("array<double>"))
     exploded = emb.select(
         F.col(group_col).alias("grp"), F.posexplode(quant).alias("dim", "qv")
     )

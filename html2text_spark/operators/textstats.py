@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_int
+from .dedup import md5_int, split_words
 
 #: BPE-ish token pattern: alnum runs or single non-space symbols
 TOKEN_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
@@ -33,7 +33,7 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(
         "doc_id",
         F.regexp_count(F.col(text_col), F.lit(TOKEN_PATTERN)).alias("n_tokens"),
-        F.size(F.split(F.trim(F.col(text_col)), r"\s+")).alias("n_words"),
+        F.size(split_words(text_col)).alias("n_words"),
     )
 
 
@@ -58,7 +58,7 @@ def quality_score(
     """
     text = F.col(text_col)
     n_chars = F.length(text).cast("double")
-    n_words = F.size(F.split(F.trim(text), r"\s+")).cast("double")
+    n_words = F.size(split_words(text)).cast("double")
     n_punct = F.regexp_count(text, F.lit(r"[^\w\s]")).cast("double")
     n_stop = _marker_hits(text_col, STOPWORDS).cast("double")
 
@@ -111,7 +111,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     int64 (acc < 1e15, md5_int < 1.16e18, product+sum < 9.2e18) so both
     engines compute identical values with no overflow.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = split_words(text_col)
     fp = F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -131,7 +131,7 @@ def repetition_stats(df, text_col: str = "text", k: int = 3):
     from .dedup import shingles
 
     grams = shingles(text_col, k)
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = split_words(text_col)
     n_g = F.size(grams)
     n_gd = F.size(F.array_distinct(grams))
     n_w = F.size(words)
@@ -297,7 +297,7 @@ def salient_terms(
     words = df.select(
         F.col(group_col).alias("grp"),
         F.col("doc_id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.explode(split_words(text_col)).alias("word"),
     )
     stats = words.groupBy("grp", "word").agg(
         F.count("*").alias("tf"),
@@ -391,7 +391,7 @@ def filter_verdicts(df: DataFrame, text_col: str = "text") -> DataFrame:
     reasons).
     """
     text = F.col(text_col)
-    words = F.split(F.trim(text), r"\s+")
+    words = split_words(text)
     n_words = F.size(words).cast("double")
     n_stop = _marker_hits(text_col, STOPWORDS).cast("double")
     n_distinct = F.size(F.array_distinct(words)).cast("double")
@@ -449,7 +449,7 @@ def bm25_topk(
     """
     if not terms or len(set(terms)) != len(terms):
         raise ValueError("terms must be non-empty and unique")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = split_words(text_col)
     proj = [F.col("doc_id"), F.size(words).cast("long").alias("doclen")]
     for i, t in enumerate(terms):
         proj.append(
@@ -511,7 +511,7 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     operation-for-operation in the oracle, so even the float is
     value-exact cross-engine.  Pure projection: zero shuffle.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = split_words(text_col)
     # split('') yields [''] -- a blank/whitespace doc has ZERO words,
     # not one, and must score NULL rather than maximum ease
     blank = F.trim(F.col(text_col)) == ""

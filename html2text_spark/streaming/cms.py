@@ -30,10 +30,11 @@ def cms_words_stream(
 ) -> DataFrame:
     """Streaming CMS counter table over whitespace words (complete
     mode): bounded state = the depth x width counters themselves."""
+    from ..operators.dedup import split_words
     from ..operators.sketches import count_min_build
 
     words = docs_stream.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("item")
+        F.explode(split_words(text_col)).alias("item")
     )
     return count_min_build(words, "item", depth=depth, width=width)
 

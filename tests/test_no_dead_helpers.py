@@ -4,9 +4,10 @@ A helper that only tests call is dead weight: it is kept working, documented
 and reviewed, yet no query, job or benchmark runs it.  This guard searches
 the program's own sources (the package, ``__spark_entry__.py``, the bench
 and job scripts, ``tools/`` and ``perfbench/``) for each top-level ``def``
-name on a word boundary; a name found nowhere but its own ``def`` line is
-reported.  Mentions inside strings count, so names exported through
-``__all__`` pass.
+name on a word boundary, less every ``def <name>`` line in those sources; a
+name found nowhere but on ``def`` lines is reported, so two same-named
+functions in different modules do not keep each other alive.  Mentions
+inside strings count, so names exported through ``__all__`` pass.
 """
 
 import ast
@@ -41,9 +42,15 @@ def unreferenced_defs() -> list:
         for node in ast.parse(text).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
-            word = re.compile(r"\b%s\b" % re.escape(node.name))
-            # the def line itself is the one hit a dead name still has
-            if sum(len(word.findall(t)) for t in sources.values()) <= 1:
+            name = re.escape(node.name)
+            word = re.compile(r"\b%s\b" % name)
+            define = re.compile(r"\bdef\s+%s\b" % name)
+            # def lines are the only hits a dead name still has
+            uses = sum(
+                len(word.findall(t)) - len(define.findall(t))
+                for t in sources.values()
+            )
+            if uses <= 0:
                 dead.append(f"{os.path.relpath(path, ROOT)}:{node.name}")
     return dead
 

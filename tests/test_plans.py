@@ -236,6 +236,7 @@ def test_topk_windows_use_window_group_limit(spark):
         "sim_quantized_topk",
         "sim_cosine_topk",
         "sim_lsh_topk",
+        "sim_ivf_topk",
         "sim_ivf_det_topk",
         "rel_customer_order_ranks",
         "events_kmv_users",
