@@ -68,14 +68,9 @@ def _spread(df: DataFrame) -> DataFrame:
     exact number but forced full physical planning + RDD conversion per
     call: ~0.6 s of driver time *inside every timed query*, ~35% of the
     r5 headline bench total.)  Non-file plans or remote schemes fall
-    back to the exact probe.  A deployment with a real multi-split input
-    disables the whole probe by setting
-    ``spark.html2text.assumeMultiSplit=true`` on the session.
+    back to the exact probe.
     """
-    sess = df.sparkSession
-    if sess.conf.get("spark.html2text.assumeMultiSplit", "false") == "true":
-        return df
-    parallelism = sess.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if _estimated_scan_partitions(df, parallelism) < parallelism:
         return df.repartition(parallelism)
     return df
@@ -828,9 +823,6 @@ def q_events_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_QUERY_SEQ = [0]
-
-
 def q_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING tumbling-window rollup (built-in watermarked window agg,
     append mode) driven to completeness with a far-future clock event --
@@ -839,12 +831,8 @@ def q_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the custom sessionizer) is also value-checked against DuckDB."""
     from html2text_spark.streaming.windows import hourly_rollup_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return hourly_rollup_complete(
-        spark, events,
-        query_name=f"hourly_rollup_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return hourly_rollup_complete(spark, events)
 
 
 def q_events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,12 +841,8 @@ def q_events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     third stateful streaming family with an exact oracle."""
     from html2text_spark.streaming.windows import distinct_users_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return distinct_users_complete(
-        spark, events,
-        query_name=f"distinct_users_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return distinct_users_complete(spark, events)
 
 
 def q_events_segments_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,13 +852,9 @@ def q_events_segments_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed append output equals the batch join+rollup exactly."""
     from html2text_spark.streaming.enrich import segment_rollup_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     customer = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    return segment_rollup_complete(
-        spark, events, customer,
-        query_name=f"segment_rollup_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return segment_rollup_complete(spark, events, customer)
 
 
 def q_events_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,14 +865,8 @@ def q_events_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming operator value-for-value."""
     from html2text_spark.streaming.sessions import sessionize_events_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return sessionize_events_complete(
-        spark,
-        events,
-        gap_minutes=30,
-        query_name=f"sessions_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return sessionize_events_complete(spark, events, gap_minutes=30)
 
 
 def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1219,14 +1193,8 @@ def q_events_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains completely and equals the batch interval join exactly."""
     from html2text_spark.streaming.joins import attribution_join_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return attribution_join_complete(
-        spark,
-        events,
-        window_minutes=120,
-        query_name=f"attribution_join_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return attribution_join_complete(spark, events, window_minutes=120)
 
 
 def q_events_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,12 +1248,6 @@ def q_events_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: absentee (CMS must report exactly 0 for an item no counter ever saw)
 CMS_PROBES = ("spark", "query", "the", "join", "table", "zzz_absent")
 CMS_DEPTH, CMS_WIDTH = 4, 512
-
-
-def _stream_query_name(prefix: str, sf_dir: str) -> str:
-    """Unique memory-sink name per (family, sf dir) -- one mangling rule
-    for every streaming query that keys its sink off the data dir."""
-    return prefix + "_sf" + sf_dir.rstrip("/").split("sf")[-1].replace(".", "_")
 
 
 def _cms_probe_report(words, est) -> DataFrame:
@@ -1348,7 +1310,6 @@ def q_text_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes,
         depth=CMS_DEPTH,
         width=CMS_WIDTH,
-        query_name=_stream_query_name("cms", sf_dir),
     )
     words = docs.select(
         F.explode(D.split_words("text")).alias("item")
@@ -1623,11 +1584,7 @@ def q_events_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality estimator can offer."""
     from html2text_spark.streaming.kmv import kmv_events_complete
 
-    return kmv_events_complete(
-        spark,
-        _tbl(spark, sf_dir, "events"),
-        query_name=_stream_query_name("kmv", sf_dir),
-    )
+    return kmv_events_complete(spark, _tbl(spark, sf_dir, "events"))
 
 
 def q_curation_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1894,14 +1851,8 @@ def q_events_attribution_outer_stream(spark: SparkSession, sf_dir: str) -> DataF
     batch LEFT interval join exactly."""
     from html2text_spark.streaming.joins import attribution_outer_complete
 
-    _STREAM_QUERY_SEQ[0] += 1
     events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return attribution_outer_complete(
-        spark,
-        events,
-        window_minutes=120,
-        query_name=f"attribution_outer_complete_{_STREAM_QUERY_SEQ[0]}",
-    )
+    return attribution_outer_complete(spark, events, window_minutes=120)
 
 
 def queries() -> dict[str, _Q]:

@@ -52,16 +52,13 @@ def _n_agg(v: pd.Series) -> int:
     return int(len(v))
 
 
-def robust_dispersion(
-    df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-group median and MAD of exact integer cents via grouped-agg
-    pandas UDFs.  NULL values are excluded (SQL aggregate semantics)."""
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    d = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("grp"), cents.alias("c")
+def robust_dispersion(df: DataFrame) -> DataFrame:
+    """Per-event-type median and MAD of exact integer cents of ``value``
+    via grouped-agg pandas UDFs.  NULL values are excluded (SQL aggregate
+    semantics)."""
+    cents = F.round(F.col("value") * 100).cast("long")
+    d = df.filter(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("grp"), cents.alias("c")
     )
     return d.groupBy("grp").agg(
         _median_agg("c").alias("median_cents"),

@@ -15,11 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Classic cohort retention: users grouped by first-seen day, counted
     on each subsequent active day offset.
 
@@ -30,22 +26,19 @@ def retention_cohorts(
     no fanout: each (user, day) row joins exactly one cohort row.
     """
     days = events.select(
-        user_col, F.date_trunc("day", ts_col).alias("day")
+        "user_id", F.date_trunc("day", "ts").alias("day")
     ).distinct()
-    first = days.groupBy(user_col).agg(F.min("day").alias("cohort_day"))
-    joined = days.join(first, user_col)
+    first = days.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
+    joined = days.join(first, "user_id")
     return joined.groupBy(
         "cohort_day",
         F.datediff("day", "cohort_day").cast("long").alias("offset_days"),
-    ).agg(F.countDistinct(user_col).alias("active_users"))
+    ).agg(F.countDistinct("user_id").alias("active_users"))
 
 
 def funnel_stages(
     events: DataFrame,
     stages: Sequence[str] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """ORDERED conversion funnel: a user reaches stage i+1 only via an
     event of that type AT OR AFTER their stage-i arrival time (the strict
@@ -66,37 +59,37 @@ def funnel_stages(
     from pyspark.sql.window import Window
 
     arrivals = (
-        events.filter(F.col(type_col) == stages[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t"))
+        events.filter(F.col("event_type") == stages[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t"))
     )
     frames = [
         arrivals.select(
             F.lit(1).cast("long").alias("stage_idx"),
             F.lit(stages[0]).alias("stage"),
-            F.col(user_col),
+            F.col("user_id"),
         )
     ]
     for i, stage in enumerate(stages[1:], start=2):
         arrivals = (
-            events.filter(F.col(type_col) == stage)
-            .join(arrivals.select(user_col, "t"), user_col)
-            .filter(F.col(ts_col) >= F.col("t"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("t"))
+            events.filter(F.col("event_type") == stage)
+            .join(arrivals.select("user_id", "t"), "user_id")
+            .filter(F.col("ts") >= F.col("t"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("t"))
         )
         frames.append(
             arrivals.select(
                 F.lit(i).cast("long").alias("stage_idx"),
                 F.lit(stage).alias("stage"),
-                F.col(user_col),
+                F.col("user_id"),
             )
         )
     unioned = frames[0]
     for f in frames[1:]:
         unioned = unioned.unionAll(f)
     counts = unioned.groupBy("stage_idx", "stage").agg(
-        F.countDistinct(user_col).alias("users")
+        F.countDistinct("user_id").alias("users")
     )
     # an EMPTY stage must still emit a users=0 row (the SQL-oracle
     # UNION-of-scalar-aggregates form always does; without this the two
@@ -125,8 +118,6 @@ def funnel_stages(
 def rolling_active_users(
     events: DataFrame,
     window_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Trailing N-day distinct active users per day (the 7-day DAU/WAU
     rollup every activity dashboard runs).
@@ -145,7 +136,7 @@ def rolling_active_users(
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1, got {window_days}")
     pairs = events.select(
-        F.col(user_col).alias("user"), F.date_trunc("day", ts_col).alias("day")
+        F.col("user_id").alias("user"), F.date_trunc("day", "ts").alias("day")
     ).distinct()
     contrib = pairs.select(
         "user",
@@ -162,13 +153,7 @@ def rolling_active_users(
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order transition matrix over per-user event sequences (the
     path-analysis primitive behind funnels-you-didn't-predefine).
 
@@ -178,14 +163,14 @@ def event_transitions(
     one tiny matrix aggregate (|types|^2 + |types| rows).  Deterministic
     ordering via the unique sequence tie-break.
     """
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col).asc(), F.col(seq_col).asc()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    prev = F.lag(F.col(type_col)).over(w)
+    prev = F.lag(F.col("event_type")).over(w)
     return (
         events.select(
             F.coalesce(prev, F.lit("START")).alias("prev_type"),
-            F.col(type_col).alias("next_type"),
+            F.col("event_type").alias("next_type"),
         )
         .groupBy("prev_type", "next_type")
         .agg(F.count("*").alias("transitions"))
@@ -193,12 +178,9 @@ def event_transitions(
 
 
 def gapfill_daily_counts(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    materialize: bool = False,
+    events: DataFrame, materialize: bool = False
 ) -> DataFrame:
-    """Dense daily series per group: every day in the group's observed
+    """Dense daily series per event type: every day in the type's observed
     [min, max] range appears, zero-filled where no events landed (the
     densification step dashboards and window models need -- a missing
     day must read as 0, not as an absent row).
@@ -221,9 +203,9 @@ def gapfill_daily_counts(
     ``spark.catalog.clearCache()`` once the result is consumed, or
     Spark's LRU eviction eventually reclaims it).
     """
-    day = F.date_trunc("day", ts_col)
+    day = F.date_trunc("day", "ts")
     counts = events.groupBy(
-        F.col(group_col).alias("grp"), day.alias("day")
+        F.col("event_type").alias("grp"), day.alias("day")
     ).agg(F.count("*").alias("events"))
     if materialize:
         counts = counts.persist()

@@ -21,13 +21,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def latest_state(
-    changes: DataFrame,
-    key_cols: tuple = ("user_id",),
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
-    """Last-writer-wins compaction: one row per key, the newest change.
+def latest_state(changes: DataFrame) -> DataFrame:
+    """Last-writer-wins compaction: one row per ``user_id``, the newest
+    change.
 
     The batch equivalent of a MERGE/upsert materialization: ordering is
     (ts desc, seq desc) so concurrent same-timestamp writes resolve
@@ -35,8 +31,8 @@ def latest_state(
     identical snapshot.  row_number (not max ts + self-join) keeps it
     to ONE shuffle and lets WindowGroupLimit cap the exchange.
     """
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-        F.col(ts_col).desc(), F.col(seq_col).desc()
+    w = Window.partitionBy(F.col("user_id")).orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
     )
     return (
         changes.withColumn("_rn", F.row_number().over(w))
@@ -45,28 +41,23 @@ def latest_state(
     )
 
 
-def scd2_history(
-    changes: DataFrame,
-    key_cols: tuple = ("user_id",),
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def scd2_history(changes: DataFrame) -> DataFrame:
     """Slowly-changing-dimension (type 2) history from a change log.
 
     Every change row becomes a validity interval: valid_from = its own
-    timestamp, valid_to = the NEXT change's timestamp for the same key
+    timestamp, valid_to = the NEXT change's timestamp for the same user
     (null while current), is_current flags the open interval.  One
     lead() window per key -- the standard temporal-table build.
     """
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-        F.col(ts_col).asc(), F.col(seq_col).asc()
+    w = Window.partitionBy(F.col("user_id")).orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
-    valid_to = F.lead(F.col(ts_col)).over(w)
+    valid_to = F.lead(F.col("ts")).over(w)
     return changes.select(
-        *key_cols,
-        seq_col,
-        F.col(ts_col).alias("valid_from"),
+        "user_id",
+        "event_id",
+        F.col("ts").alias("valid_from"),
         valid_to.alias("valid_to"),
         valid_to.isNull().alias("is_current"),
-        *[c for c in changes.columns if c not in (*key_cols, ts_col, seq_col)],
+        *[c for c in changes.columns if c not in ("user_id", "ts", "event_id")],
     )

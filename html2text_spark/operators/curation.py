@@ -44,24 +44,21 @@ def hash_sample(
 def pack_sequences(
     df: DataFrame,
     window_tokens: int = 512,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
     shards: int = 16,
 ) -> DataFrame:
     """Assign documents to fixed-token-budget packs (training sequences).
 
-    The running-sum window partitions by (group, shard) with
+    The running-sum window partitions by (source, shard) with
     ``shard = md5(doc_id) % shards`` -- a pure deterministic function of
     the id, so the layout is stable across retries and mirrorable in the
-    SQL oracle.  Partitioning by group alone would hand one task an
+    SQL oracle.  Partitioning by source alone would hand one task an
     ENTIRE source's documents to sort and scan (a source is corpus-sized
     at the 10^12-row design point); real pipelines pack per shard anyway,
-    since packs never span shard files.  Within each (group, shard),
+    since packs never span shard files.  Within each (source, shard),
     documents are ordered by id and a document belongs to pack
     ``floor(preceding_tokens / window)`` -- the standard concat-and-chunk
-    layout.  Returns per-pack stats keyed (group, shard, pack_id).  One
-    shuffle; the largest window partition is ~|group| / shards rows, so
+    layout.  Returns per-pack stats keyed (source, shard, pack_id).  One
+    shuffle; the largest window partition is ~|source| / shards rows, so
     ``shards`` is the knob that bounds task size independently of source
     skew.
     """
@@ -69,46 +66,40 @@ def pack_sequences(
         raise ValueError(f"pack_sequences: shards={shards} < 1")
     from .dedup import md5_int32  # single copy of the md5-int contract
 
-    shard = md5_int32(F.col(id_col).cast("string")) % shards
+    shard = md5_int32(F.col("doc_id").cast("string")) % shards
     w = (
-        Window.partitionBy(group_col, "shard")
-        .orderBy(id_col)
+        Window.partitionBy("source", "shard")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = F.sum(tokens_col).over(w)
-    pack = F.floor((cum - F.col(tokens_col)) / F.lit(window_tokens))
+    cum = F.sum("n_tokens").over(w)
+    pack = F.floor((cum - F.col("n_tokens")) / F.lit(window_tokens))
     return (
         df.withColumn("shard", shard)
         .withColumn("pack_id", pack)
-        .groupBy(group_col, "shard", "pack_id")
+        .groupBy("source", "shard", "pack_id")
         .agg(
             F.count("*").alias("docs"),
-            F.sum(tokens_col).alias("pack_tokens"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.sum("n_tokens").alias("pack_tokens"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )
 
 
-def top_ngrams(
-    df: DataFrame,
-    n: int = 2,
-    k: int = 10,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-k whitespace word n-grams per group by frequency (vocabulary /
+def top_ngrams(df: DataFrame, n: int = 2, k: int = 10) -> DataFrame:
+    """Top-k whitespace word n-grams per ``lang`` by frequency (vocabulary /
     contamination statistics).  Ties broken by gram ascending so the
     result is deterministic and oracle-exact."""
     from .dedup import split_words
 
-    words = split_words(text_col)
+    words = split_words("text")
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(words, i, n)),
     )
     exploded = df.select(
-        F.col(group_col).alias("grp"), F.explode(grams).alias("gram")
+        F.col("lang").alias("grp"), F.explode(grams).alias("gram")
     )
     counts = exploded.groupBy("grp", "gram").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("grp").orderBy(F.desc("freq"), F.asc("gram"))
@@ -123,7 +114,6 @@ def weighted_priority_sample(
     weight_col: str,
     group_col: str,
     k: int = 20,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic weighted sampling: top-k priority sampling.
 
@@ -147,12 +137,12 @@ def weighted_priority_sample(
     from .dedup import unit_hash
 
     df = df.filter(F.col(weight_col) > 0)
-    pri = F.col(weight_col).cast("double") / unit_hash(F.col(id_col))
+    pri = F.col(weight_col).cast("double") / unit_hash(F.col("doc_id"))
     w = Window.partitionBy(group_col).orderBy(
-        F.desc("priority"), F.asc(id_col)
+        F.desc("priority"), F.asc("doc_id")
     )
     return (
-        df.select(id_col, group_col, weight_col)
+        df.select("doc_id", group_col, weight_col)
         .withColumn("priority", pri)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -163,7 +153,6 @@ def weighted_priority_sample(
 def decontaminate(
     corpus: DataFrame,
     eval_df: DataFrame,
-    text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing at least
@@ -181,11 +170,11 @@ def decontaminate(
 
     corpus_grams = corpus.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(text_col, k))).alias("gram"),
+        F.explode(F.array_distinct(shingles(k))).alias("gram"),
     )
     eval_grams = (
         eval_df.select(
-            F.explode(F.array_distinct(shingles(text_col, k))).alias("gram")
+            F.explode(F.array_distinct(shingles(k))).alias("gram")
         )
         .distinct()
     )
@@ -196,36 +185,32 @@ def decontaminate(
     )
 
 
-def mix_sources(
-    df: DataFrame,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Domain mixing: downsample over-represented groups toward an equal
+def mix_sources(df: DataFrame) -> DataFrame:
+    """Domain mixing: downsample over-represented sources toward an equal
     share so no single source dominates the training mix (the data-mixing
     pass every large pretraining pipeline runs after dedup/quality).
 
-    Per-group keep rate = min(1, (total/n_groups) / group_count); a row
+    Per-source keep rate = min(1, (total/n_sources) / source_count); a row
     is kept when ``unit_hash(id) <= rate`` -- the same pure-hash decision
     as ``hash_sample``, so the mix is reproducible across retries and
     mirrorable in the SQL oracle (unit_hash + IEEE division, bit-equal
-    cross-engine).  Groups at or under their share keep everything.
+    cross-engine).  Sources at or under their share keep everything.
 
-    Plan: one tiny per-group count aggregate, broadcast back onto the
+    Plan: one tiny per-source count aggregate, broadcast back onto the
     corpus (a genuine dimension -- |sources|, never corpus-sized), one
     codegen filter.  The corpus itself is never shuffled.  Returns
-    per-group audit rows (group, docs, kept, rate).
+    per-source audit rows (source, docs, kept, rate).
     """
     from .dedup import unit_hash
 
     w_all = Window.partitionBy()
     rates = (
-        df.groupBy(group_col)
+        df.groupBy("source")
         .agg(F.count("*").alias("grp_docs"))
         .withColumn("_total", F.sum("grp_docs").over(w_all))
         .withColumn("_n_grps", F.count("*").over(w_all))
         .select(
-            group_col,
+            "source",
             "grp_docs",
             F.least(
                 F.lit(1.0),
@@ -235,24 +220,19 @@ def mix_sources(
         )
     )
     kept = (
-        df.select(id_col, group_col)
-        .join(F.broadcast(rates), group_col)
-        .filter(unit_hash(F.col(id_col)) <= F.col("rate"))
+        df.select("doc_id", "source")
+        .join(F.broadcast(rates), "source")
+        .filter(unit_hash(F.col("doc_id")) <= F.col("rate"))
     )
-    return kept.groupBy(group_col).agg(
+    return kept.groupBy("source").agg(
         F.max("grp_docs").alias("docs"),
         F.count("*").alias("kept"),
         F.round(F.max("rate"), 6).alias("rate"),
     )
 
 
-def domain_cap(
-    df: DataFrame,
-    k: int = 5,
-    group_cols: tuple = ("source", "lang"),
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Frequency capping: keep at most ``k`` documents per group.
+def domain_cap(df: DataFrame, k: int = 5) -> DataFrame:
+    """Frequency capping: keep at most ``k`` documents per (source, lang).
 
     The per-domain cap every web-corpus recipe applies (C4, RefinedWeb:
     bound any single host's contribution so one crawl-heavy domain
@@ -267,14 +247,14 @@ def domain_cap(
     k * n_partitions rows per group, never the whole group (a
     crawl-heavy domain is corpus-sized at the design point).
     """
-    order = F.md5(F.col(id_col).cast("string"))
-    w = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy(
-        order.asc(), F.col(id_col).asc()
+    order = F.md5(F.col("doc_id").cast("string"))
+    w = Window.partitionBy(F.col("source"), F.col("lang")).orderBy(
+        order.asc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(*group_cols, id_col, "rank")
+        .select("source", "lang", "doc_id", "rank")
     )
 
 
@@ -282,7 +262,6 @@ def stratified_sample(
     df: DataFrame,
     rates_pct: dict,
     strata_col: str = "lang",
-    id_col: str = "doc_id",
     default_pct: int = 0,
     salt: str = "",
 ) -> DataFrame:
@@ -304,7 +283,7 @@ def stratified_sample(
         rate = F.when(
             F.col(strata_col) == stratum, F.lit(int(pct))
         ).otherwise(rate)
-    return df.filter(_hash_pct(F.col(id_col), salt) < rate)
+    return df.filter(_hash_pct(F.col("doc_id"), salt) < rate)
 
 
 def canonical_url(url: Column) -> Column:
@@ -352,15 +331,15 @@ def canonical_url(url: Column) -> Column:
     )
 
 
-def url_dedup(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """Group documents by canonical URL: variant count + canonical doc
     (min id).  One uniform-key shuffle on the canonical string; the
     canonicalization itself is a pure projection evaluated map-side."""
     return (
-        df.select(F.col(id_col), canonical_url(F.col(url_col)).alias("canonical_url"))
+        df.select(F.col("doc_id"), canonical_url(F.col("url")).alias("canonical_url"))
         .groupBy("canonical_url")
         .agg(
             F.count("*").alias("n_variants"),
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
         )
     )

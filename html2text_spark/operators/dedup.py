@@ -73,7 +73,7 @@ _UNIVERSAL_COEFFS = [
 ]
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", keep: tuple = ()) -> DataFrame:
+def exact_dedup(df: DataFrame, keep: tuple = ()) -> DataFrame:
     """Per-document exact-duplicate labeling via content-hash windows.
 
     Returns (doc_id, content_hash, *keep, dup_count, is_canonical):
@@ -87,7 +87,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", keep: tuple = ()) -> Data
     w = Window.partitionBy("content_hash")
     return (
         df.select(
-            "doc_id", F.md5(F.col(text_col)).alias("content_hash"), *keep
+            "doc_id", F.md5(F.col("text")).alias("content_hash"), *keep
         )
         .withColumn("dup_count", F.count("*").over(w))
         .withColumn(
@@ -101,9 +101,9 @@ def split_words(text: str | Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-def shingles(text_col: str = "text", k: int = 3) -> Column:
-    """Word k-shingles as an array column (built-ins only)."""
-    w = split_words(text_col)
+def shingles(k: int = 3) -> Column:
+    """Word k-shingles of ``text`` as an array column (built-ins only)."""
+    w = split_words("text")
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(w) - F.lit(k - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(w, i, k)),
@@ -111,7 +111,7 @@ def shingles(text_col: str = "text", k: int = 3) -> Column:
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 8, k: int = 3
+    df: DataFrame, num_hashes: int = 8, k: int = 3
 ) -> DataFrame:
     """(doc_id, sig[num_hashes]): sig_i = min over shingles of
     (a_i * md5_int32(shingle) + b_i) mod (2^61-1).  Pure projection --
@@ -126,7 +126,7 @@ def minhash_signatures(
     # keeps the split because the alias is non-cheap and multiply
     # referenced; measured 3.2 s -> 0.74 s at sf0.1 -- the same hazard
     # as winnow_fingerprints' _hashes).
-    sh = shingles(text_col, k)
+    sh = shingles(k)
     hashed = df.select(
         "doc_id", F.transform(sh, lambda s: md5_int32(s)).alias("_base")
     )
@@ -146,7 +146,6 @@ def minhash_signatures(
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
     k: int = 3,
@@ -178,7 +177,7 @@ def minhash_lsh_candidates(
     """
     rows_per_band = num_hashes // bands
     assert num_hashes <= len(_UNIVERSAL_COEFFS), "extend _UNIVERSAL_COEFFS"
-    sigs = minhash_signatures(df, text_col, num_hashes, k)
+    sigs = minhash_signatures(df, num_hashes, k)
     banded = sigs.select(
         "doc_id",
         F.explode(
@@ -234,12 +233,7 @@ def minhash_lsh_candidates(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Candidate pairs -> duplicate clusters: (doc_id, cluster_id).
 
     ``cluster_id`` is the minimum doc_id reachable through the pair graph
@@ -273,9 +267,9 @@ def connected_components(
         # running a round -- even for empty input
         raise ValueError(f"connected_components: max_iters={max_iters} < 1")
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct()
     )
@@ -341,12 +335,7 @@ def resolve_clusters(pairs: DataFrame) -> DataFrame:
     )
 
 
-def cluster_representatives(
-    pairs: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "quality",
-) -> DataFrame:
+def cluster_representatives(pairs: DataFrame, scores: DataFrame) -> DataFrame:
     """Pick each near-dup cluster's representative by SCORE, not min id.
 
     Real curation keeps the best-quality member of a duplicate cluster
@@ -359,9 +348,9 @@ def cluster_representatives(
     window partitioning, one exchange total after the join.
     """
     comp = connected_components(pairs)
-    joined = comp.join(scores.select(id_col, score_col), on=id_col)
+    joined = comp.join(scores.select("doc_id", "quality"), on="doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+        F.col("quality").desc(), F.col("doc_id").asc()
     )
     return (
         joined.withColumn(
@@ -371,8 +360,8 @@ def cluster_representatives(
         .filter(F.col("_rn") == 1)
         .select(
             "cluster_id",
-            F.col(id_col).alias("keep_doc_id"),
-            score_col,
+            F.col("doc_id").alias("keep_doc_id"),
+            "quality",
             "cluster_size",
         )
     )
@@ -381,7 +370,6 @@ def cluster_representatives(
 def ngram_jaccard_pairs(
     df: DataFrame,
     group_col: str,
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.0,
 ) -> DataFrame:
@@ -393,7 +381,7 @@ def ngram_jaccard_pairs(
     grams = df.select(
         F.col("doc_id"),
         F.col(group_col).alias("grp"),
-        F.array_distinct(shingles(text_col, k)).alias("grams"),
+        F.array_distinct(shingles(k)).alias("grams"),
     )
     a = grams.alias("a")
     b = grams.alias("b")
@@ -416,9 +404,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(
-    df: DataFrame, text_col: str = "text", doc_id_col: str = "doc_id"
-) -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash fingerprint per document (Arrow-batched pandas UDF).
 
     Tokens vote per bit weighted by term frequency; md5-based token
@@ -463,12 +449,10 @@ def simhash64(
 
         return texts.map(one)
 
-    return df.select(doc_id_col, _simhash(F.col(text_col)).alias("simhash"))
+    return df.select("doc_id", _simhash(F.col("text")).alias("simhash"))
 
 
-def edit_distance_verify(
-    corpus: DataFrame, pairs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def edit_distance_verify(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact edit-distance verification of candidate near-dup pairs.
 
     The character-level companion to ``ngram_jaccard_pairs``: for each
@@ -487,10 +471,10 @@ def edit_distance_verify(
     mirror is valid under the documented ASCII precondition.
     """
     a = corpus.select(
-        F.col("doc_id").alias("doc_a"), F.col(text_col).alias("_ta")
+        F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta")
     )
     b = corpus.select(
-        F.col("doc_id").alias("doc_b"), F.col(text_col).alias("_tb")
+        F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb")
     )
     j = pairs.join(a, on="doc_a").join(b, on="doc_b")
     lev = F.levenshtein("_ta", "_tb")
@@ -506,9 +490,7 @@ def edit_distance_verify(
     )
 
 
-def triangle_stats(
-    edges: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Triangle census of an (a < b)-oriented edge list -- the
     clustering-coefficient ingredient dedup pipelines use to tell
     near-dup CLIQUES (template families, mirror farms: triangle-dense)
@@ -524,7 +506,7 @@ def triangle_stats(
     key).  Returns one row: (n_nodes, n_edges, n_triangles).
     """
     e = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).distinct()
     wedges = (
         e.select("a", F.col("b").alias("x"))
@@ -550,8 +532,6 @@ def triangle_stats(
 
 def pagerank_fixed(
     edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     iters: int = 5,
     damping_pct: int = 85,
     scale: int = 1_000_000,
@@ -578,8 +558,8 @@ def pagerank_fixed(
     """
     if iters < 1 or not (0 < damping_pct < 100) or scale < 1:
         raise ValueError("pagerank_fixed: invalid (iters, damping_pct, scale)")
-    fwd = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    fwd = edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    rev = edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     # materialize the static frames ONCE: every iteration joins
     # dir_edges, and without the checkpoint the upstream edge derivation
     # (e.g. LSH candidate generation) re-executes per round

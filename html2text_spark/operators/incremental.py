@@ -28,22 +28,17 @@ from .relational import _cents, _sum_wide
 _AGG_COLS = ("n_events", "value_cents", "first_ts", "last_ts")
 
 
-def totals_snapshot(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key mergeable totals (the materialized state)."""
-    return events.groupBy(key_col).agg(
+def totals_snapshot(events: DataFrame) -> DataFrame:
+    """Per-user mergeable totals (the materialized state)."""
+    return events.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
-        _sum_wide(_cents(value_col)).alias("value_cents"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
+        _sum_wide(_cents("value")).alias("value_cents"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
     )
 
 
-def merge_snapshots(prev: DataFrame, delta: DataFrame, key_col: str = "user_id") -> DataFrame:
+def merge_snapshots(prev: DataFrame, delta: DataFrame) -> DataFrame:
     """Merge two totals snapshots (previous state + delta aggregate).
 
     union + one groupBy on the key: every aggregate column merges by
@@ -51,9 +46,9 @@ def merge_snapshots(prev: DataFrame, delta: DataFrame, key_col: str = "user_id")
     through unchanged (a new user appears, an idle user persists).
     """
     return (
-        prev.select(key_col, *_AGG_COLS)
-        .unionByName(delta.select(key_col, *_AGG_COLS))
-        .groupBy(key_col)
+        prev.select("user_id", *_AGG_COLS)
+        .unionByName(delta.select("user_id", *_AGG_COLS))
+        .groupBy("user_id")
         .agg(
             F.sum("n_events").cast("long").alias("n_events"),
             _sum_wide(F.col("value_cents")).alias("value_cents"),

@@ -3,10 +3,10 @@
 Images/audio/video ride the corpus as (payload: binary, meta: struct)
 columns.  The Spark-side plumbing -- schema, Arrow batch shape, partition
 behavior, UDF signatures -- is real and tested; the actual codec step is
-STUBBED (no image/audio libraries in this container): ``decode_image``
-raises NotImplementedError and ``extract_media_features`` computes a
-deterministic fake feature vector from the raw bytes so the pipeline
-shape can be exercised end-to-end.
+faked (no image/audio libraries are a dependency): ``decode_media_fake``
+reads each payload's bytes as a 1xN grayscale image and
+``extract_media_features`` computes a deterministic fake feature vector
+from the raw bytes, so the pipeline shape can be exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -60,30 +60,20 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def attach_fake_media(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_media(df: DataFrame) -> DataFrame:
     """Derive a deterministic binary payload + metadata from a text corpus
     (test stand-in for a real media table; prod reads real bytes)."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(F.lit("fake://"), F.col("doc_id").cast("string")).alias("media_ref"),
         payload.alias("payload"),
         F.struct(
             F.lit("image/fake").alias("mime"),
-            (F.length(F.col(text_col)) % 1920).cast("int").alias("width"),
-            (F.length(F.col(text_col)) % 1080).cast("int").alias("height"),
+            (F.length(F.col("text")) % 1920).cast("int").alias("width"),
+            (F.length(F.col("text")) % 1080).cast("int").alias("height"),
             F.lit(0).cast("int").alias("duration_ms"),
         ).alias("meta"),
-    )
-
-
-def decode_image(payload: bytes):
-    """Codec stub: decoding requires an image library not present in this
-    container.  The Spark plumbing around it is real; swap this function
-    for PIL/libvips in production."""
-    raise NotImplementedError(
-        "image decode requires an image codec library (e.g. PIL); "
-        "not available in this environment"
     )
 
 
@@ -101,7 +91,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     mapInPandas so one Python worker call handles a whole Arrow batch of
-    payloads; the real decode (decode_image) slots into the same loop.
+    payloads; a real decoder slots into the same loop.
     A batch closes at arrow.maxRecordsPerBatch rows or, under
     pipeline.recommended_session_conf, at arrow.maxBytesPerBatch
     (256 KiB), whichever comes first: a payload that large makes a batch
@@ -169,7 +159,7 @@ def decode_media_fake(media: DataFrame) -> DataFrame:
     The per-image compute is genuinely decode-shaped -- numpy
     ``frombuffer`` + vectorized stats + a 4-bucket histogram per payload
     inside Arrow batches (the same mapInPandas loop a PIL/libvips decode
-    slots into, see ``decode_image``) -- while staying a pure function
+    slots into) -- while staying a pure function
     of the bytes, so every statistic has a closed form an external SQL
     engine can recompute: the DuckDB oracle re-derives luma from
     per-character code points (bytes == code points for this ASCII

@@ -203,14 +203,9 @@ def key_constraint_audit(tables: dict) -> DataFrame:
     return out
 
 
-def count_anomalies(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    z_thresh: float = 2.0,
-) -> DataFrame:
+def count_anomalies(df: DataFrame, z_thresh: float = 2.0) -> DataFrame:
     """Volume-anomaly screen: hourly event-count buckets whose z-score
-    against their group's mean hourly volume exceeds ``z_thresh``.
+    against their event type's mean hourly volume exceeds ``z_thresh``.
 
     The moments pipeline is exact-integer until the last step: per-
     (group, hour) counts, then per-group (H, sum, sum of squares) --
@@ -227,14 +222,14 @@ def count_anomalies(
     dimension.  Groups need H >= 2 and nonzero variance to score.
     """
     b = df.groupBy(
-        group_col, F.date_trunc("hour", F.col(ts_col)).alias("bucket")
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
     ).agg(F.count("*").alias("cnt"))
-    s = b.groupBy(group_col).agg(
+    s = b.groupBy("event_type").agg(
         F.count("*").alias("h"),
         F.sum("cnt").alias("s1"),
         F.sum(F.col("cnt") * F.col("cnt")).alias("s2"),
     )
-    j = b.join(F.broadcast(s), group_col)
+    j = b.join(F.broadcast(s), "event_type")
     var = (
         (F.col("s2") * F.col("h") - F.col("s1") * F.col("s1")).cast("double")
         / (F.col("h") * (F.col("h") - F.lit(1))).cast("double")
@@ -246,5 +241,5 @@ def count_anomalies(
         j.filter((F.col("h") > 1) & (F.col("s2") * F.col("h") > F.col("s1") * F.col("s1")))
         .withColumn("z", z)
         .filter(F.abs(F.col("z")) > z_thresh)
-        .select(group_col, "bucket", "cnt", F.round("z", 8).alias("z"))
+        .select("event_type", "bucket", "cnt", F.round("z", 8).alias("z"))
     )

@@ -344,8 +344,8 @@ def quantized_cosine_topk(
     return _rerank_topk(_vectors(emb, _idot), query_ids, k, dot=_idot)
 
 
-def quantized_centroids(emb: DataFrame, group_col: str = "label") -> DataFrame:
-    """Per-group embedding centroid computed ENTIRELY in integer space.
+def quantized_centroids(emb: DataFrame) -> DataFrame:
+    """Per-label embedding centroid computed ENTIRELY in integer space.
 
     Float vector averaging is shuffle-order-dependent (double addition
     does not associate), so a naive per-dimension mean is not
@@ -365,7 +365,7 @@ def quantized_centroids(emb: DataFrame, group_col: str = "label") -> DataFrame:
     """
     quant = _quantize(F.col("embedding").cast("array<double>"))
     exploded = emb.select(
-        F.col(group_col).alias("grp"), F.posexplode(quant).alias("dim", "qv")
+        F.col("label").alias("grp"), F.posexplode(quant).alias("dim", "qv")
     )
     return exploded.groupBy("grp", "dim").agg(
         F.sum("qv").alias("sum_q"),

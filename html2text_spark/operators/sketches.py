@@ -23,7 +23,7 @@ mergeability demonstrated here are identical either way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -90,6 +90,23 @@ def hll_distinct(
     )
 
 
+def _cms_cells(item: Column, depth: int, width: int) -> Column:
+    """The ``depth`` (row, col) counters an item addresses: row i's
+    column is md5(item || '#i') mod width.  Build and probe share it, so
+    they cannot address different cells."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("row"),
+                F.pmod(
+                    md5_int(F.concat(item, F.lit(f"#{i}"))), F.lit(width)
+                ).alias("col"),
+            )
+            for i in range(depth)
+        ]
+    )
+
+
 def count_min_build(
     items: DataFrame,
     item_col: str = "item",
@@ -111,18 +128,9 @@ def count_min_build(
     <= depth*width rows per map task.  Sketches over shards merge by
     adding counters (same grouped sum).
     """
-    item = F.col(item_col)
-    rc = [
-        F.struct(
-            F.lit(i).alias("row"),
-            F.pmod(
-                md5_int(F.concat(item, F.lit(f"#{i}"))), F.lit(width)
-            ).alias("col"),
-        )
-        for i in range(depth)
-    ]
+    cells = _cms_cells(F.col(item_col), depth, width)
     return (
-        items.select(F.explode(F.array(*rc)).alias("rc"))
+        items.select(F.explode(cells).alias("rc"))
         .groupBy(F.col("rc.row").alias("row"), F.col("rc.col").alias("col"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -144,21 +152,7 @@ def count_min_estimate(
     """
     item = F.col(item_col)
     addressed = probes.select(
-        item,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        F.pmod(
-                            md5_int(F.concat(item, F.lit(f"#{i}"))),
-                            F.lit(width),
-                        ).alias("col"),
-                    )
-                    for i in range(depth)
-                ]
-            )
-        ).alias("rc"),
+        item, F.explode(_cms_cells(item, depth, width)).alias("rc")
     ).select(item_col, "rc.row", "rc.col")
     joined = addressed.join(sketch, on=["row", "col"], how="left")
     return joined.groupBy(item_col).agg(

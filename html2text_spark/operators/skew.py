@@ -28,15 +28,8 @@ from .dedup import md5_int32
 from .relational import _cents, _sum_wide
 
 
-def salted_partials(
-    events: DataFrame,
-    key_col: str = "user_id",
-    seq_col: str = "event_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    buckets: int = 16,
-) -> DataFrame:
-    """Phase 1 of ``two_phase_totals``: per-(key, salt) partials.
+def salted_partials(events: DataFrame, buckets: int = 16) -> DataFrame:
+    """Phase 1 of ``two_phase_totals``: per-(user_id, salt) partials.
 
     Exposed separately so tests can assert partition OCCUPANCY of the
     salted exchange directly (spark_partition_id over the partials) --
@@ -47,29 +40,22 @@ def salted_partials(
         raise ValueError(f"buckets must be >= 1, got {buckets}")
     if "_salt" in events.columns:
         raise ValueError("input already has a _salt column")
-    cents = _cents(value_col)
+    cents = _cents("value")
     return events.groupBy(
-        key_col,
+        "user_id",
         F.pmod(
-            md5_int32(F.col(seq_col).cast("string")), F.lit(buckets)
+            md5_int32(F.col("event_id").cast("string")), F.lit(buckets)
         ).alias("_salt"),
     ).agg(
         F.count("*").alias("_n"),
         F.sum(cents.cast("decimal(38,0)")).alias("_cents"),
-        F.min(ts_col).alias("_first"),
-        F.max(ts_col).alias("_last"),
+        F.min("ts").alias("_first"),
+        F.max("ts").alias("_last"),
     )
 
 
-def two_phase_totals(
-    events: DataFrame,
-    key_col: str = "user_id",
-    seq_col: str = "event_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    buckets: int = 16,
-) -> DataFrame:
-    """Per-key totals via salted partial aggregation.
+def two_phase_totals(events: DataFrame, buckets: int = 16) -> DataFrame:
+    """Per-user totals via salted partial aggregation.
 
     The salt is md5 of the row-unique sequence id (NOT of the key --
     hashing the key would put the whole hot key in one bucket again),
@@ -78,10 +64,8 @@ def two_phase_totals(
     cents (round(value*100)) through the 128-bit accumulator; min/max
     compose trivially.  Output matches the plain groupBy bit-for-bit.
     """
-    partial = salted_partials(
-        events, key_col, seq_col, value_col, ts_col, buckets
-    )
-    return partial.groupBy(key_col).agg(
+    partial = salted_partials(events, buckets)
+    return partial.groupBy("user_id").agg(
         F.sum("_n").cast("long").alias("n_events"),
         _sum_wide(F.col("_cents")).alias("value_cents"),
         F.min("_first").alias("first_ts"),

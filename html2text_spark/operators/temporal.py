@@ -32,11 +32,11 @@ def asof_join(
     key: str = "user_id",
     ts_col: str = "ts",
     payload_cols: Sequence[str] = ("value",),
-    prefix: str = "asof_",
 ) -> DataFrame:
     """For each left row attach the latest right row with the same key
     and ``right.ts <= left.ts`` (inclusive), LEFT-join semantics (no
-    match -> nulls).
+    match -> nulls).  Each payload column ``c`` is attached as
+    ``asof_c``, and the matched right timestamp as ``asof_ts``.
 
     The right side must be unique per (key, ts) -- pre-aggregate it if
     not, or which payload wins at an equal timestamp is undefined (the
@@ -61,17 +61,17 @@ def asof_join(
     left_cols = left.columns
     # the union/window encoding synthesizes these names; a left column
     # shadowing one would silently corrupt the running-last state
-    # the attached timestamp is always aliased f"{prefix}ts" regardless
+    # the attached timestamp is always aliased asof_ts regardless
     # of ts_col -- guard only names actually synthesized
-    internal = {"_side", "_r_ts", f"{prefix}ts"}
+    internal = {"_side", "_r_ts", "asof_ts"}
     for c in pay:
         internal.add(f"_r_{c}")
-        internal.add(f"{prefix}{c}")
+        internal.add(f"asof_{c}")
     clash = sorted(internal.intersection(left_cols))
     if clash:
         raise ValueError(
             f"asof_join: left columns {clash} collide with internal/"
-            f"output names; rename them or pick another prefix"
+            f"output names; rename them"
         )
     l_tag = left.select(
         *left_cols,
@@ -101,10 +101,10 @@ def asof_join(
         *left_cols,
         "_side",
         *[
-            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"{prefix}{c}")
+            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"asof_{c}")
             for c in pay
         ],
-        F.last("_r_ts", ignorenulls=True).over(w).alias(f"{prefix}ts"),
+        F.last("_r_ts", ignorenulls=True).over(w).alias("asof_ts"),
     )
     return attached.filter(F.col("_side") == 1).drop("_side")
 
@@ -113,12 +113,9 @@ def range_join_events(
     events: DataFrame,
     intervals: DataFrame,
     key: str,
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     bucket_seconds: int = 3600,
 ) -> DataFrame:
-    """Events |x| intervals where start <= ts < end, without the
+    """Events |x| intervals where start_ts <= ts < end_ts, without the
     inequality-join cross product.
 
     Catalyst plans a bare ``e.ts >= i.start AND e.ts < i.end`` predicate
@@ -151,25 +148,25 @@ def range_join_events(
             * bucket_seconds
         )
 
-    ev = events.withColumn("_bkt", _floor(ts_col))
+    ev = events.withColumn("_bkt", _floor("ts"))
     # a malformed interval (end < start) would make sequence() throw a
     # runtime error deep inside the stage; with end exclusive such rows
     # can match nothing, so dropping them is both safe and graceful
-    intervals = intervals.filter(F.col(end_col) >= F.col(start_col))
+    intervals = intervals.filter(F.col("end_ts") >= F.col("start_ts"))
     iv = intervals.withColumn(
         "_bkt",
         F.explode(
             F.sequence(
-                _floor(start_col),
+                _floor("start_ts"),
                 # end is exclusive, but an interval ending exactly on a
                 # bucket boundary still covers no event in that bucket;
                 # generating it is harmless (filtered below), simpler
-                _floor(end_col),
+                _floor("end_ts"),
                 F.expr(f"interval {bucket_seconds} seconds"),
             )
         ),
     )
     joined = ev.join(iv, on=[key, "_bkt"]).filter(
-        (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
+        (F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts"))
     )
     return joined.drop("_bkt")

@@ -28,23 +28,21 @@ LANG_MARKERS = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"]
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_words): regexp token count + whitespace words."""
     return df.select(
         "doc_id",
-        F.regexp_count(F.col(text_col), F.lit(TOKEN_PATTERN)).alias("n_tokens"),
-        F.size(split_words(text_col)).alias("n_words"),
+        F.regexp_count(F.col("text"), F.lit(TOKEN_PATTERN)).alias("n_tokens"),
+        F.size(split_words("text")).alias("n_words"),
     )
 
 
-def _marker_hits(text_col: str, words) -> Column:
+def _marker_hits(words) -> Column:
     pattern = r"\b(" + "|".join(words) + r")\b"
-    return F.regexp_count(F.lower(F.col(text_col)), F.lit(pattern))
+    return F.regexp_count(F.lower(F.col("text")), F.lit(pattern))
 
 
-def quality_score(
-    df: DataFrame, text_col: str = "text", keep: tuple = ()
-) -> DataFrame:
+def quality_score(df: DataFrame, keep: tuple = ()) -> DataFrame:
     """Heuristic document quality: length, punctuation and stopword ratios.
 
     score = 0.4*min(words/100,1) + 0.3*stopword_ratio*5 (capped at 0.3)
@@ -56,11 +54,11 @@ def quality_score(
     retain a grouping key, where recovering it later would mean a second
     corpus-sized join.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     n_chars = F.length(text).cast("double")
     n_words = F.size(split_words(text)).cast("double")
     n_punct = F.regexp_count(text, F.lit(r"[^\w\s]")).cast("double")
-    n_stop = _marker_hits(text_col, STOPWORDS).cast("double")
+    n_stop = _marker_hits(STOPWORDS).cast("double")
 
     punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
@@ -83,14 +81,14 @@ def quality_score(
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-marker language ID over LANG_MARKERS.
 
     predicted = argmax over languages of marker-hit count (ties broken by
     language code ascending, matching the oracle's deterministic order).
     """
     scores = [
-        (lang, _marker_hits(text_col, words)) for lang, words in sorted(LANG_MARKERS.items())
+        (lang, _marker_hits(words)) for lang, words in sorted(LANG_MARKERS.items())
     ]
     best = F.greatest(*[s for _, s in scores])
     predicted = F.coalesce(
@@ -104,14 +102,14 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(*cols)
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_fingerprint(df: DataFrame) -> DataFrame:
     """Order-sensitive rolling-hash fingerprint of the word sequence.
 
     fold: acc = (acc * 31 + md5_int(word)) mod 10^15 -- stays within
     int64 (acc < 1e15, md5_int < 1.16e18, product+sum < 9.2e18) so both
     engines compute identical values with no overflow.
     """
-    words = split_words(text_col)
+    words = split_words("text")
     fp = F.aggregate(
         words,
         F.lit(0).cast("long"),
@@ -120,7 +118,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", fp.alias("fingerprint"))
 
 
-def repetition_stats(df, text_col: str = "text", k: int = 3):
+def repetition_stats(df, k: int = 3):
     """Gopher-style repetition quality signals (Rae et al. 2021,
     "Scaling Language Models: ... Gopher", App. A: repetition filters):
     the fraction of duplicated word k-grams and duplicated words per
@@ -130,8 +128,8 @@ def repetition_stats(df, text_col: str = "text", k: int = 3):
     """
     from .dedup import shingles
 
-    grams = shingles(text_col, k)
-    words = split_words(text_col)
+    grams = shingles(k)
+    words = split_words("text")
     n_g = F.size(grams)
     n_gd = F.size(F.array_distinct(grams))
     n_w = F.size(words)
@@ -151,7 +149,7 @@ def repetition_stats(df, text_col: str = "text", k: int = 3):
     )
 
 
-def winnow_fingerprints(df, text_col: str = "text", k: int = 3, w: int = 4):
+def winnow_fingerprints(df, k: int = 3, w: int = 4):
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     "Winnowing: local algorithms for document fingerprinting", SIGMOD
     2003 -- the MOSS algorithm): hash every word k-gram, slide a window
@@ -172,7 +170,7 @@ def winnow_fingerprints(df, text_col: str = "text", k: int = 3, w: int = 4):
     # measured 58 s vs 4 s at sf0.1)
     hashed = df.select(
         "doc_id",
-        F.transform(shingles(text_col, k), lambda s: md5_int32(s)).alias(
+        F.transform(shingles(k), lambda s: md5_int32(s)).alias(
             "_hashes"
         ),
     )
@@ -269,12 +267,7 @@ def group_percentiles_exact(
     return a.select(*out)
 
 
-def salient_terms(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def salient_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Top-k salient words per group by tf-idf-style score -- vocabulary
     characterization for corpus curation (what distinguishes a source /
     language slice).
@@ -295,15 +288,15 @@ def salient_terms(
     from pyspark.sql.window import Window
 
     words = df.select(
-        F.col(group_col).alias("grp"),
+        F.col("lang").alias("grp"),
         F.col("doc_id"),
-        F.explode(split_words(text_col)).alias("word"),
+        F.explode(split_words("text")).alias("word"),
     )
     stats = words.groupBy("grp", "word").agg(
         F.count("*").alias("tf"),
         F.countDistinct("doc_id").alias("df"),
     )
-    group_docs = df.groupBy(F.col(group_col).alias("grp")).agg(
+    group_docs = df.groupBy(F.col("lang").alias("grp")).agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
     scored = stats.join(F.broadcast(group_docs), "grp").select(
@@ -337,7 +330,7 @@ PII_PATTERNS = (
 )
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Redact emails / IPv4s / phone markers and count them per doc.
 
     A standard training-data compliance pass: counts come from
@@ -350,7 +343,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     Returns (doc_id, n_email, n_ip, n_phone, scrubbed_len,
     scrubbed_md5).
     """
-    text = F.col(text_col)
+    text = F.col("text")
     counts = [
         F.regexp_count(text, F.lit(pat)).alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS
@@ -376,7 +369,7 @@ FILTER_RULES = {
 }
 
 
-def filter_verdicts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def filter_verdicts(df: DataFrame) -> DataFrame:
     """Combined quality-filter verdict per document with reason codes.
 
     The decision stage of a Gopher/C4-style cleaning pipeline: each
@@ -390,10 +383,9 @@ def filter_verdicts(df: DataFrame, text_col: str = "text") -> DataFrame:
     Returns (doc_id, n_words, stopword_ratio, dup_word_ratio, kept,
     reasons).
     """
-    text = F.col(text_col)
-    words = split_words(text)
+    words = split_words("text")
     n_words = F.size(words).cast("double")
-    n_stop = _marker_hits(text_col, STOPWORDS).cast("double")
+    n_stop = _marker_hits(STOPWORDS).cast("double")
     n_distinct = F.size(F.array_distinct(words)).cast("double")
     stop_ratio = F.when(n_words > 0, n_stop / n_words).otherwise(F.lit(0.0))
     dup_ratio = F.when(
@@ -424,10 +416,7 @@ BM25_B = 0.75
 
 
 def bm25_topk(
-    df: DataFrame,
-    terms: tuple = BM25_TERMS,
-    k: int = 20,
-    text_col: str = "text",
+    df: DataFrame, terms: tuple = BM25_TERMS, k: int = 20
 ) -> DataFrame:
     """BM25 relevance top-k over whitespace words -- the lexical ranking
     stage of a retrieval/decontamination pipeline.
@@ -449,7 +438,7 @@ def bm25_topk(
     """
     if not terms or len(set(terms)) != len(terms):
         raise ValueError("terms must be non-empty and unique")
-    words = split_words(text_col)
+    words = split_words("text")
     proj = [F.col("doc_id"), F.size(words).cast("long").alias("doclen")]
     for i, t in enumerate(terms):
         proj.append(
@@ -500,7 +489,7 @@ def bm25_topk(
     )
 
 
-def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
+def readability(df: DataFrame) -> DataFrame:
     """Flesch-style reading-ease score per document -- the classic
     quality-stratification signal next to the Gopher/C4 verdicts.
 
@@ -511,10 +500,10 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
     operation-for-operation in the oracle, so even the float is
     value-exact cross-engine.  Pure projection: zero shuffle.
     """
-    words = split_words(text_col)
+    words = split_words("text")
     # split('') yields [''] -- a blank/whitespace doc has ZERO words,
     # not one, and must score NULL rather than maximum ease
-    blank = F.trim(F.col(text_col)) == ""
+    blank = F.trim(F.col("text")) == ""
     n_words = F.when(blank, F.lit(0)).otherwise(F.size(words)).cast("long")
     syllables = F.aggregate(
         F.transform(
@@ -524,7 +513,7 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
         lambda acc, x: acc + x,
     )
     n_sent = F.greatest(
-        F.regexp_count(F.col(text_col), F.lit(r"[.!?]+")), F.lit(1)
+        F.regexp_count(F.col("text"), F.lit(r"[.!?]+")), F.lit(1)
     ).cast("long")
     wps = n_words.cast("double") / n_sent.cast("double")
     spw = syllables.cast("double") / n_words.cast("double")

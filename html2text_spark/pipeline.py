@@ -105,10 +105,6 @@ def recommended_session_conf() -> dict:
         # byte cap binds only where rows average over 512 bytes
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
         "spark.sql.execution.arrow.maxBytesPerBatch": str(256 * 1024),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # a 100 TB corpus scan: default 128 MB splits are fine
-        "spark.sql.files.maxPartitionBytes": "134217728",
     }
 
 
@@ -248,12 +244,12 @@ def salt_by_size(df: DataFrame, num_partitions: int) -> DataFrame:
     return salted.repartition(num_partitions, "_salt").drop("_salt")
 
 
-def spans_bytes_col(spans_col: str = "spans"):
+def spans_bytes_col():
     """Approximate document weight: total text bytes across spans; 0 for
     a NULL ``spans``, so salt_stratified's small tier keeps that row."""
     return F.coalesce(
         F.aggregate(
-            F.transform(spans_col, lambda s: F.length(s["text"])),
+            F.transform("spans", lambda s: F.length(s["text"])),
             F.lit(0),
             lambda acc, x: acc + F.coalesce(x, F.lit(0)),
         ),
@@ -420,14 +416,14 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
-def markdown_col(spans_col: str = "spans"):
-    """Column expression reassembling the markdown text from a spans array
-    (pure built-ins, JVM-side codegen): filter to kind='text', concat in
-    offset order."""
+def markdown_col():
+    """Column expression reassembling the markdown text from the ``spans``
+    array (pure built-ins, JVM-side codegen): filter to kind='text',
+    concat in offset order."""
     return F.concat_ws(
         "",
         F.transform(
-            F.filter(spans_col, lambda s: s["kind"] == F.lit("text")),
+            F.filter("spans", lambda s: s["kind"] == F.lit("text")),
             lambda s: s["text"],
         ),
     )

@@ -214,66 +214,3 @@ def zorder_key(c0, c1, bits: int = 16):
             F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return reduce(lambda x, y: x.bitwiseOR(y), terms)
-
-
-def read_media_files(
-    spark: SparkSession,
-    path: str,
-    mime: str = "application/octet-stream",
-    pattern: str = "*",
-    require_unique_ids: bool = True,
-) -> DataFrame:
-    """Media ingestion via Spark's built-in ``binaryFile`` source: each
-    file becomes one (doc_id, media_ref, payload, meta) row in the
-    multimodal schema, ready for ``decode_media_fake`` /
-    ``extract_media_features``.
-
-    The binaryFile source reads (path, modificationTime, length,
-    content) with predicate pushdown on the path/length columns and
-    per-file parallelism -- the standard way raw image/audio dumps enter
-    a Spark pipeline before being compacted into parquet/Iceberg binary
-    columns (small-file pressure makes the compaction step mandatory at
-    crawl scale; this reader is the front door, not the steady state).
-    doc_id is the file stem, media_ref the full URI.
-
-    Stems are NOT globally unique (cover.jpg + cover.png, or the same
-    name in nested dirs, collide -- and everything downstream keys on
-    doc_id), so ``require_unique_ids`` runs one tiny duplicate-count
-    aggregate over the file listing and raises with the colliding stems
-    before any payload is read.  Crawl-scale callers that key on
-    media_ref (always unique: the full URI) can pass False to skip the
-    extra job.
-    """
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-    )
-    stem = F.regexp_extract(F.col("path"), r"([^/]+?)(\.[A-Za-z0-9]+)?$", 1)
-    if require_unique_ids:
-        dupes = [
-            r["stem"]
-            for r in raw.select(stem.alias("stem"))
-            .groupBy("stem")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(10)
-            .collect()
-        ]
-        if dupes:
-            raise ValueError(
-                "read_media_files: duplicate doc_id stems "
-                f"{dupes} -- rename the files, or pass "
-                "require_unique_ids=False and key on media_ref"
-            )
-    return raw.select(
-        stem.alias("doc_id"),
-        F.col("path").alias("media_ref"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-        ).alias("meta"),
-    )

@@ -23,10 +23,7 @@ from pyspark.sql import functions as F
 
 
 def cms_words_stream(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    depth: int = 4,
-    width: int = 512,
+    docs_stream: DataFrame, depth: int = 4, width: int = 512
 ) -> DataFrame:
     """Streaming CMS counter table over whitespace words (complete
     mode): bounded state = the depth x width counters themselves."""
@@ -34,7 +31,7 @@ def cms_words_stream(
     from ..operators.sketches import count_min_build
 
     words = docs_stream.select(
-        F.explode(split_words(text_col)).alias("item")
+        F.explode(split_words("text")).alias("item")
     )
     return count_min_build(words, "item", depth=depth, width=width)
 
@@ -45,7 +42,6 @@ def cms_words_complete(
     probes,
     depth: int = 4,
     width: int = 512,
-    query_name: str = "cms_complete",
 ) -> DataFrame:
     """Drain the streaming CMS over a finite corpus and point-query it:
     the streamed sketch equals batch ``count_min_build`` bit-for-bit
@@ -58,7 +54,6 @@ def cms_words_complete(
         spark,
         [docs.select("text")],
         lambda s: cms_words_stream(s, depth=depth, width=width),
-        query_name,
         output_mode="complete",
     )
     return count_min_estimate(sketch, probes, depth=depth, width=width)

@@ -53,10 +53,7 @@ def segment_rollup_stream(
 
 
 def segment_rollup_complete(
-    spark,
-    events: DataFrame,
-    customer: DataFrame,
-    query_name: str = "segment_rollup_complete",
+    spark, events: DataFrame, customer: DataFrame
 ) -> DataFrame:
     """Run the stream-static rollup over a finite event set and emit
     every real window (clock row matches no customer; see module
@@ -71,5 +68,4 @@ def segment_rollup_complete(
         spark,
         [staged],
         lambda s: segment_rollup_stream(s, customer),
-        query_name,
     )

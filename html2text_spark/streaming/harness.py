@@ -17,6 +17,7 @@ import contextlib
 import os
 import shutil
 import tempfile
+import uuid
 from datetime import datetime
 from typing import Callable, Sequence, Tuple
 
@@ -26,7 +27,6 @@ from pyspark.sql import functions as F
 #: clock rows sit this many days past the last real event
 CLOCK_DAYS = 10
 
-
 @contextlib.contextmanager
 def _state_partitions(spark):
     """Pin the stream's state-store partition count for the query run.
@@ -35,18 +35,15 @@ def _state_partitions(spark):
     partition PER stateful operator (a stream-stream join keeps four),
     and every micro-batch commits a delta file per instance -- so the
     partition count should track STATE VOLUME, not the batch session's
-    core count.  ``spark.html2text.stream.statePartitions`` overrides it
-    (a deployment with large keyed state raises it); the default of 8
-    fits the finite harness's per-group state at any tested SF (state
-    rows ~ |groups|, not |rows|).  Measured 32 -> 8 at sf0.1: the LEFT
-    OUTER interval join drops ~30% wall from state-commit overhead
-    alone.  Restored after the query finishes (the value is only read
-    at stream start).
+    core count.  8 partitions fit the finite harness's per-group state
+    at any tested SF (state rows ~ |groups|, not |rows|).  Measured
+    32 -> 8 at sf0.1: the LEFT OUTER interval join drops ~30% wall from
+    state-commit overhead alone.  Restored after the query finishes
+    (the value is only read at stream start).
     """
     conf = spark.conf
-    target = conf.get("spark.html2text.stream.statePartitions", "8")
     prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", target)
+    conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield
     finally:
@@ -57,15 +54,16 @@ def run_finite_stream(
     spark,
     inputs: Sequence[DataFrame],
     stream_fn: Callable[..., DataFrame],
-    query_name: str,
     output_mode: str = "append",
 ) -> DataFrame:
     """Stage each of ``inputs`` as ONE parquet file, apply ``stream_fn``
     to one readStream per input (in order), drain with availableNow into
-    memory sink ``query_name`` and return the resulting table.
+    a memory sink and return the resulting table.  Every run gets its
+    own sink name, so runs never collide.
 
     With several inputs (stream-stream joins) each side is its own file,
     so the first micro-batch admits every side's rows atomically."""
+    query_name = f"h2t_stream_{uuid.uuid4().hex}"
     stage_dir = tempfile.mkdtemp(prefix="h2t_stream_")
     try:
         streams = []

@@ -96,7 +96,6 @@ def attribution_join_complete(
     spark,
     events: DataFrame,
     window_minutes: int = 120,
-    query_name: str = "attribution_join_complete",
 ) -> DataFrame:
     """Run the stream-stream attribution join over a finite event set.
 
@@ -113,7 +112,6 @@ def attribution_join_complete(
         spark,
         [views, clicks],
         lambda v, c: attribution_join_stream(v, c, window_minutes),
-        query_name,
     )
 
 
@@ -121,7 +119,6 @@ def attribution_outer_complete(
     spark,
     events: DataFrame,
     window_minutes: int = 120,
-    query_name: str = "attribution_outer_complete",
 ) -> DataFrame:
     """Run the LEFT OUTER stream-stream attribution join to completion.
 
@@ -153,6 +150,5 @@ def attribution_outer_complete(
         lambda v, c: attribution_join_stream(
             v, c, window_minutes, how="left_outer"
         ),
-        query_name,
     )
     return out.filter(F.col("view_ts") < F.lit(clock))

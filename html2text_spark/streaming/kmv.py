@@ -53,18 +53,15 @@ _UNIT_SCALE = float(1 << 60)
 
 def kmv_stream(
     events_stream: DataFrame,
-    key_col: str = "user_id",
-    group_col: str = "event_type",
-    ts_col: str = "ts",
     k: int = 64,
     watermark: str = "30 minutes",
     horizon=None,
 ) -> DataFrame:
-    """Per-group streaming KMV sketch, emitted when the event-time
-    watermark passes ``horizon`` (a timestamp: the end of the observed
-    window).  Rows with ts > horizon only advance the watermark (the
-    finite-run completion clock rides this); rows up to it update the
-    sketch.  With horizon=None every row updates and the sketch emits
+    """Per-event-type streaming KMV sketch of distinct ``user_id``s,
+    emitted when the event-time watermark passes ``horizon`` (a
+    timestamp: the end of the observed window).  Rows with ts > horizon
+    only advance the watermark (the finite-run completion clock rides
+    this); rows up to it update the sketch.  With horizon=None every row updates and the sketch emits
     when the group times out one watermark-delay past its last event.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -153,10 +150,10 @@ def kmv_stream(
     from ..operators.dedup import md5_int
 
     stream = (
-        events_stream.withColumn("ts", F.col(ts_col).cast("timestamp"))
+        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
         .select(
-            F.col(group_col).alias("grp"),
+            F.col("event_type").alias("grp"),
             "ts",
             # null keys (the completion clock rows) must keep flowing so
             # they advance the watermark (a JVM-side null filter gets
@@ -167,7 +164,7 @@ def kmv_stream(
             # hashes are non-negative, so the state function drops the
             # sentinel exactly.
             F.coalesce(
-                md5_int(F.col(key_col).cast("string")), F.lit(-1).cast("long")
+                md5_int(F.col("user_id").cast("string")), F.lit(-1).cast("long")
             ).alias("_kh"),
         )
     )
@@ -183,10 +180,7 @@ def kmv_stream(
 def kmv_events_complete(
     spark,
     events: DataFrame,
-    key_col: str = "user_id",
-    group_col: str = "event_type",
     k: int = 64,
-    query_name: str = "kmv_complete",
 ) -> DataFrame:
     """Run the streaming KMV sketch over a finite event set to
     completion: one far-future clock row per group advances the
@@ -199,23 +193,18 @@ def kmv_events_complete(
 
     horizon, clock_ts = clock_horizon(events)
     clock = (
-        events.select(group_col).distinct()
+        events.select("event_type").distinct()
         .select(
-            group_col,
+            "event_type",
             F.lit(clock_ts).alias("ts"),
-            F.lit(None).cast("long").alias(key_col),
+            F.lit(None).cast("long").alias("user_id"),
         )
     )
     staged = events.select(
-        group_col, F.col("ts").cast("timestamp").alias("ts"), key_col
+        "event_type", F.col("ts").cast("timestamp").alias("ts"), "user_id"
     ).unionByName(clock)
     out = run_finite_stream(
-        spark,
-        [staged],
-        lambda s: kmv_stream(
-            s, key_col=key_col, group_col=group_col, k=k, horizon=horizon
-        ),
-        query_name,
+        spark, [staged], lambda s: kmv_stream(s, k=k, horizon=horizon)
     )
     return out.select(
         "grp", "n_kept", F.round("kmv_estimate_raw", 6).alias("kmv_estimate")

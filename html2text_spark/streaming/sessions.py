@@ -169,7 +169,6 @@ def sessionize_events_complete(
     spark,
     events: DataFrame,
     gap_minutes: int = 30,
-    query_name: str = "sessions_complete",
 ) -> DataFrame:
     """Run the STREAMING sessionizer over a finite event set and emit
     EVERY real session -- an oracle-checkable streaming result.
@@ -206,5 +205,4 @@ def sessionize_events_complete(
         spark,
         [staged],
         lambda s: sessionize_stream(s, gap_minutes=gap_minutes),
-        query_name,
     )

@@ -67,11 +67,7 @@ def distinct_users_stream(events_stream: DataFrame) -> DataFrame:
     return events_stream.select("user_id").dropDuplicates(["user_id"])
 
 
-def distinct_users_complete(
-    spark,
-    events: DataFrame,
-    query_name: str = "distinct_users_complete",
-) -> DataFrame:
+def distinct_users_complete(spark, events: DataFrame) -> DataFrame:
     """Run the streaming dedup over a finite event set (shared harness;
     no clock event needed -- dropDuplicates emits on first sight,
     nothing waits on the watermark)."""
@@ -81,15 +77,10 @@ def distinct_users_complete(
         spark,
         [events.select("user_id", "ts", "event_type", "value")],
         distinct_users_stream,
-        query_name,
     )
 
 
-def hourly_rollup_complete(
-    spark,
-    events: DataFrame,
-    query_name: str = "hourly_rollup_complete",
-) -> DataFrame:
+def hourly_rollup_complete(spark, events: DataFrame) -> DataFrame:
     """Run the streaming rollup over a finite event set and emit EVERY
     real window (see module docstring; staged via the shared
     single-batch harness)."""
@@ -99,6 +90,4 @@ def hourly_rollup_complete(
     staged = with_clock_events(
         events, spark.createDataFrame([(-1,)], "user_id long"), clock
     )
-    return run_finite_stream(
-        spark, [staged], hourly_rollup_stream, query_name
-    )
+    return run_finite_stream(spark, [staged], hourly_rollup_stream)

@@ -17,7 +17,15 @@ When the stamp changed, the first importer to see it re-reads the archive
 and the others share that read.  The package ``__init__`` installs it, so
 every worker that runs a task of this package has it.
 
-Limit: the stamp is all that is compared.  An archive rewritten in place
+Limit: a new worker's first task still pays one full re-read.  PySpark's
+worker ``main`` calls ``setup_spark_files`` (and so
+``importlib.invalidate_caches()``) before ``read_command`` unpickles the
+task, and unpickling is what imports this package and installs the guard.
+So each new Python worker re-reads pyspark.zip once per importer on its
+first task; with worker reuse (the default) later tasks skip it.  That
+first re-read counts in a run's set-up time (perfbench's ``setup_s``).
+
+Second limit: the stamp is all that is compared.  An archive rewritten in place
 to the same size within the file system's timestamp granularity keeps its
 old directory, and imports from it can then fail with a bad local file
 header or read the wrong bytes; 3.12 would re-read it.  Replace an archive

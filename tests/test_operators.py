@@ -255,7 +255,7 @@ def test_winnow_shared_substring_guarantee(spark):
         "doc_id long, text string",
     )
     # recompute each doc's full selected set to intersect them
-    hashes = _F.transform(shingles("text", 3), lambda s: md5_int32(s))
+    hashes = _F.transform(shingles(3), lambda s: md5_int32(s))
     n = _F.size(hashes)
     sel = _F.array_distinct(
         _F.transform(
@@ -278,9 +278,7 @@ def test_distinct_users_stream_matches_batch(spark):
     from html2text_spark.streaming.windows import distinct_users_complete
 
     events = spark.read.parquet(f"{SF}/events.parquet")
-    streamed = distinct_users_complete(
-        spark, events, query_name="t_distinct_stream"
-    )
+    streamed = distinct_users_complete(spark, events)
     got = {r["user_id"] for r in streamed.collect()}
     exp = {r["user_id"] for r in events.select("user_id").distinct().collect()}
     assert got == exp and len(got) > 0
@@ -408,13 +406,29 @@ def test_lang_id_schema_and_determinism(spark, docs):
 def test_multimodal_stub_and_features(spark, docs):
     from html2text_spark.operators.multimodal import (
         attach_fake_media,
-        decode_image,
+        decode_media_fake,
         extract_media_features,
         frame_sample_plan,
     )
 
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
+    # the fake codec reads each payload as a 1xN grayscale image; an
+    # empty payload gets NULL stats, not a crash
+    raw = spark.createDataFrame(
+        [
+            ("a", "mem://a", bytearray(b"hello world")),
+            ("b", "mem://b", bytearray(range(256))),
+            ("e", "mem://e", bytearray(b"")),
+        ],
+        "doc_id string, media_ref string, payload binary",
+    )
+    dec = {r["doc_id"]: r for r in decode_media_fake(raw).collect()}
+    assert dec["a"]["n_pixels"] == 11
+    assert dec["b"]["n_pixels"] == 256
+    assert (dec["b"]["min_luma"], dec["b"]["max_luma"]) == (0, 255)
+    assert (dec["b"]["h0"], dec["b"]["h1"], dec["b"]["h2"], dec["b"]["h3"]) == (
+        64, 64, 64, 64,
+    )
+    assert dec["e"]["n_pixels"] == 0 and dec["e"]["mean_luma"] is None
 
     media = attach_fake_media(docs.limit(10))
     feats = extract_media_features(media).collect()
@@ -631,9 +645,7 @@ def test_hourly_rollup_stream_matches_batch(spark):
     from html2text_spark.streaming.windows import hourly_rollup_complete
 
     events = spark.read.parquet(f"{SF}/events.parquet")
-    streamed = hourly_rollup_complete(
-        spark, events, query_name="t_hourly_stream"
-    )
+    streamed = hourly_rollup_complete(spark, events)
     batch = events.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
@@ -675,7 +687,7 @@ def test_sessionize_stream_rocksdb_state_store(spark):
         got = {
             tuple(r)
             for r in sessionize_events_complete(
-                spark, events, gap_minutes=30, query_name="sessions_rocksdb"
+                spark, events, gap_minutes=30
             ).collect()
         }
     finally:
@@ -997,9 +1009,7 @@ def test_segment_rollup_stream_matches_batch(spark):
 
     events = spark.read.parquet(f"{SF}/events.parquet")
     customer = spark.read.parquet(f"{SF}/customer.parquet")
-    streamed = segment_rollup_complete(
-        spark, events, customer, query_name="t_segment_stream"
-    )
+    streamed = segment_rollup_complete(spark, events, customer)
     batch = (
         events.join(
             customer.select(
@@ -1165,8 +1175,8 @@ def test_group_percentiles_rejects_duplicate_names(spark, docs):
 
 
 def test_asof_join_custom_ts_col_prefixed_name_ok(spark):
-    """A left column named f'{prefix}{ts_col}' is NOT synthesized by the
-    operator (the attached ts is always f'{prefix}ts') and must be
+    """A left column named f'asof_{ts_col}' is NOT synthesized by the
+    operator (the attached ts is always 'asof_ts') and must be
     accepted."""
     from html2text_spark.operators.temporal import asof_join
 
@@ -1200,9 +1210,7 @@ def test_streaming_dedup_within_watermark_bounded_state(spark):
             .select("user_id")
         )
 
-    streamed = run_finite_stream(
-        spark, [events], dedup_wm, "t_dedup_within_wm"
-    )
+    streamed = run_finite_stream(spark, [events], dedup_wm)
     got = sorted(r["user_id"] for r in streamed.collect())
     want = sorted(
         r["user_id"] for r in events.select("user_id").distinct().collect()
@@ -1229,7 +1237,7 @@ def test_finite_stream_removes_staging_dir_when_query_fails(
         return stream.select("no_such_col")
 
     with pytest.raises(Exception, match="no_such_col"):
-        run_finite_stream(spark, [events], failing, "t_failing_stream")
+        run_finite_stream(spark, [events], failing)
     assert staged and staged[0].startswith("h2t_stream_")
     assert os.listdir(tmp_path) == []
 
@@ -1365,9 +1373,7 @@ def test_attribution_stream_matches_batch(spark):
     from html2text_spark.streaming.joins import attribution_join_complete
 
     events = spark.read.parquet(f"{SF}/events.parquet")
-    streamed = attribution_join_complete(
-        spark, events, window_minutes=120, query_name="t_attr_stream"
-    )
+    streamed = attribution_join_complete(spark, events, window_minutes=120)
     v = events.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         F.col("ts").cast("timestamp").alias("view_ts"),
@@ -1822,9 +1828,7 @@ def test_attribution_outer_stream_matches_batch(spark):
     from html2text_spark.streaming.joins import attribution_outer_complete
 
     events = spark.read.parquet(f"{SF}/events.parquet")
-    streamed = attribution_outer_complete(
-        spark, events, window_minutes=120, query_name="t_attr_outer"
-    )
+    streamed = attribution_outer_complete(spark, events, window_minutes=120)
     v = events.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         F.col("ts").cast("timestamp").alias("view_ts"),
@@ -2025,9 +2029,7 @@ def test_kmv_stream_equals_batch(spark):
     events = spark.read.parquet(f"{SF}/events.parquet")
     got = {
         r["grp"]: (r["n_kept"], r["kmv_estimate"])
-        for r in kmv_events_complete(
-            spark, events, k=8, query_name="kmv_eq_batch"
-        ).collect()
+        for r in kmv_events_complete(spark, events, k=8).collect()
     }
     want = {
         r["grp"]: (r["n_kept"], r["kmv_estimate"])
@@ -2243,7 +2245,6 @@ def test_cms_stream_equals_batch_sketch(spark):
         spark,
         [docs],
         lambda s: cms_words_stream(s, depth=3, width=64),
-        "cms_eq_batch",
         output_mode="complete",
     )
     got = {(r["row"], r["col"]): r["cnt"] for r in streamed.collect()}

@@ -643,62 +643,6 @@ def test_registry_ordering_contract():
     assert not missing, f"first-50 queries without oracles: {missing}"
 
 
-def test_read_media_files_binaryfile_source(spark, tmp_path):
-    """binaryFile ingestion: raw files -> multimodal schema rows ->
-    fake decode, with byte-exact payloads and pushdown-capable scan."""
-    import os
-
-    from html2text_spark.operators.multimodal import decode_media_fake
-    from html2text_spark.sources import read_media_files
-
-    blobs = {"a": b"hello world", "b": bytes(range(256))}
-    for name, data in blobs.items():
-        with open(tmp_path / f"{name}.bin", "wb") as f:
-            f.write(data)
-    # a zero-byte file: Spark's binaryFile source silently SKIPS empty
-    # files (documented here by assertion, so an upgrade changing that
-    # behavior is caught)
-    with open(tmp_path / "empty.bin", "wb"):
-        pass
-    media = read_media_files(spark, str(tmp_path), pattern="*.bin")
-    rows = {r["doc_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert rows == blobs
-    dec = {r["doc_id"]: r for r in decode_media_fake(media).collect()}
-    assert dec["a"]["n_pixels"] == 11
-    assert dec["b"]["n_pixels"] == 256
-    assert (dec["b"]["min_luma"], dec["b"]["max_luma"]) == (0, 255)
-    assert (dec["b"]["h0"], dec["b"]["h1"], dec["b"]["h2"], dec["b"]["h3"]) == (
-        64, 64, 64, 64,
-    )
-    # empty payloads (possible via parquet-stored binary columns even
-    # though binaryFile skips empty files): NULL stats, no crash
-    empty = spark.createDataFrame(
-        [("e", "mem://e", bytearray(b""))],
-        "doc_id string, media_ref string, payload binary",
-    )
-    r = decode_media_fake(empty).collect()[0]
-    assert r["n_pixels"] == 0 and r["mean_luma"] is None
-
-
-def test_read_media_files_rejects_stem_collisions(spark, tmp_path):
-    """cover.jpg + cover.png would silently share a doc_id; the reader
-    raises up front (review catch) unless the caller opts out."""
-    import pytest as _pytest
-
-    from html2text_spark.sources import read_media_files
-
-    for name in ("cover.jpg", "cover.png", "other.bin"):
-        with open(tmp_path / name, "wb") as f:
-            f.write(b"x")
-    with _pytest.raises(ValueError, match="duplicate doc_id stems"):
-        read_media_files(spark, str(tmp_path))
-    rows = read_media_files(
-        spark, str(tmp_path), require_unique_ids=False
-    ).collect()
-    assert len(rows) == 3
-    assert len({r["media_ref"] for r in rows}) == 3
-
-
 @pytest.mark.skipif(
     sys.version_info[:2] not in ((3, 10), (3, 11)),
     reason="the guard is installed on CPython 3.10-3.11 only; 3.12+ "
